@@ -52,21 +52,18 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from spark_hbase_connector_spark.sources.layout import data_files
+
 
 def plan_compaction(path: str, target_bytes: int = 128 * 1024 * 1024) -> list[list[str]]:
     """Greedy size-based bin-packing of a directory's parquet files, in
     filename order (= rowkey/flush order for write_table / hbasekv
     layouts). Returns groups of file paths; only groups of >=2 files are
     worth rewriting."""
-    files = sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(".")
-    )
     groups: list[list[str]] = []
     cur: list[str] = []
     cur_bytes = 0
-    for f in files:
+    for f in data_files(path):
         sz = os.path.getsize(f)
         if cur and cur_bytes + sz > target_bytes:
             groups.append(cur)
@@ -154,16 +151,13 @@ def compact_flush_files(
                 .write.mode("overwrite")
                 .parquet(out_dir)
             )
-            part = next(
-                f for f in os.listdir(out_dir)
-                if f.endswith(".parquet") and not f.startswith(".")
-            )
+            [part] = data_files(out_dir)
             # publish: manifest first (names the inputs the merged file
             # replaces), then the merged file, then drop inputs, then the
             # final rename — recover_compaction can finish from any point
             dest = group[0]  # keeps sort-order naming within the dir
             _write_manifest(dest + ".compacted.manifest", group)
-            os.replace(os.path.join(out_dir, part), dest + ".compacted")
+            os.replace(part, dest + ".compacted")
             for f in group:
                 os.remove(f)
             os.replace(dest + ".compacted", dest)
@@ -171,13 +165,8 @@ def compact_flush_files(
             rewritten += 1
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    files_after = sum(
-        1
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(".")
-    )
     return {
         "groups_rewritten": rewritten,
         "files_before": files_before,
-        "files_after": files_after,
+        "files_after": len(data_files(path)),
     }

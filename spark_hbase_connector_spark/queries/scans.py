@@ -209,7 +209,6 @@ def scan_hbasekv_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_hbasekv,
     )
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_hbasekv(spark)
     catalog = {
         "table": "tpch:customer",

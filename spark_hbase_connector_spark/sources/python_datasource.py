@@ -12,7 +12,10 @@ Full structural parity with the reference connector, component by component:
   (``HbaseScanBuilder.scala:29-52``)
 - S7 partition planning -> one ``InputPartition`` per Parquet file of the
   rowkey-sorted dataset: the file is the region analogue, its footer
-  min/max rowkey the region's [startKey, endKey) (``HbaseScan.scala:27-45``)
+  min/max rowkey the region's [startKey, endKey) (``HbaseScan.scala:27-45``).
+  The file list and footer bounds come from ``sources.layout``, the one
+  layout reader every KV planner shares, at plan time with no Spark job.
+  When no file survives pruning the read returns no rows.
 - S8 range-restricted scan -> rowkey range filters *narrow the partition
   list* before any file is opened — this fixes the reference's TODO where
   rowkey ranges were evaluated row-by-row server-side
@@ -61,6 +64,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from spark_hbase_connector_spark.sources.catalog import TableCatalog, parse_catalog
+from spark_hbase_connector_spark.sources.layout import data_files, file_bounds, physical_name
 
 _SUPPORTED = (
     EqualTo,
@@ -116,46 +120,25 @@ class HbaseKVDataSource(DataSource):
     def schema(self) -> StructType:
         return self._catalog().to_struct_type()
 
-    def reader(self, schema: StructType) -> "HbaseKVReader":
+    def _args(self, schema: StructType) -> dict:
         if "path" not in self.options:
             raise ValueError("option 'path' (dataset directory or file) is required")
-        return HbaseKVReader(
-            catalog=self._catalog(),
-            schema=schema,
-            path=self.options["path"],
-            physical_naming=self.options.get("physical_naming", "column"),
-        )
+        cat = self._catalog()
+        naming = self.options.get("physical_naming", "column")
+        physical_name(cat, cat.rowkey, naming)  # rejects an unknown naming up front
+        return dict(catalog=cat, schema=schema, path=self.options["path"], physical_naming=naming)
+
+    def reader(self, schema: StructType) -> "HbaseKVReader":
+        return HbaseKVReader(**self._args(schema))
 
     def streamReader(self, schema: StructType) -> "HbaseKVStreamReader":
-        if "path" not in self.options:
-            raise ValueError("option 'path' (dataset directory) is required")
-        return HbaseKVStreamReader(
-            catalog=self._catalog(),
-            schema=schema,
-            path=self.options["path"],
-            physical_naming=self.options.get("physical_naming", "column"),
-        )
+        return HbaseKVStreamReader(**self._args(schema))
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> "HbaseKVStreamWriter":
-        if "path" not in self.options:
-            raise ValueError("option 'path' (dataset directory) is required")
-        return HbaseKVStreamWriter(
-            catalog=self._catalog(),
-            schema=schema,
-            path=self.options["path"],
-            physical_naming=self.options.get("physical_naming", "column"),
-        )
+        return HbaseKVStreamWriter(**self._args(schema))
 
     def writer(self, schema: StructType, overwrite: bool) -> "HbaseKVBatchWriter":
-        if "path" not in self.options:
-            raise ValueError("option 'path' (dataset directory) is required")
-        return HbaseKVBatchWriter(
-            catalog=self._catalog(),
-            schema=schema,
-            path=self.options["path"],
-            physical_naming=self.options.get("physical_naming", "column"),
-            overwrite=overwrite,
-        )
+        return HbaseKVBatchWriter(**self._args(schema), overwrite=overwrite)
 
 
 class HbaseKVReader(DataSourceReader):
@@ -191,45 +174,28 @@ class HbaseKVReader(DataSourceReader):
 
     # -- S7/S8: partition planning with rowkey-range pruning ----------------
     def partitions(self) -> list[FilePartition]:
-        import pyarrow.parquet as pq
-
-        rk = self.catalog.rowkey
-        phys_rk = self._phys(rk)
-        files = self._data_files()
-        parts: list[FilePartition] = []
         lo, hi = self._rowkey_bounds()
-        for fp in files:
-            try:
-                meta = pq.ParquetFile(fp).metadata
-                names = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-                rmin = rmax = None
-                if phys_rk in names:
-                    col_idx = names[phys_rk]
-                    mins, maxs = [], []
-                    for rg in range(meta.num_row_groups):
-                        st = meta.row_group(rg).column(col_idx).statistics
-                        if st is None or not st.has_min_max:
-                            mins, maxs = [], []
-                            break
-                        mins.append(st.min)
-                        maxs.append(st.max)
-                    if mins:
-                        rmin, rmax = min(mins), max(maxs)
-            except Exception:
-                rmin = rmax = None
+        parts: list[FilePartition] = []
+        for b in file_bounds(self._data_files(), self._phys(self.catalog.rowkey)):
             # prune: skip files whose rowkey range cannot satisfy the pushed
             # rowkey bounds (the reference's unfixed TODO, done properly)
-            if rmin is not None and rmax is not None:
-                if (hi is not None and rmin > hi) or (lo is not None and rmax < lo):
-                    continue
-            parts.append(FilePartition(path=fp, rk_min=rmin, rk_max=rmax))
+            if b.rk_min is not None and (
+                (hi is not None and b.rk_min > hi) or (lo is not None and b.rk_max < lo)
+            ):
+                continue
+            parts.append(FilePartition(path=b.path, rk_min=b.rk_min, rk_max=b.rk_max))
         return parts
 
     # -- S9/S10: scan + typed predicate evaluation + decode ------------------
-    def read(self, partition: FilePartition):
+    def read(self, partition: FilePartition | None):
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        if partition is None:
+            # partitions() kept no file (every file's rowkey range misses
+            # the pushed bounds, or the table is empty); Spark then plans
+            # one read without a partition, which has no rows to return
+            return
         table, rest = self._scan(partition)
         # project to the catalog's logical columns (missing cell -> NULL)
         arrays, fields = [], []
@@ -249,21 +215,22 @@ class HbaseKVReader(DataSourceReader):
         out = pa.table(dict(zip([f.name for f in fields], arrays)))
         # only filters over ABSENT physical columns (phantom cells) remain;
         # they are evaluated over the NULL-filled logical projection
-        mask = self._compile_filters(out, rest)
-        if mask is not None:
-            out = out.filter(mask)
+        expr = self._filter_expr(rest, lambda name: name)
+        if expr is not None:
+            out = out.filter(expr)
         yield from out.to_batches()
 
     def _scan(self, partition: FilePartition):
         """Open one file with projection and predicates INSIDE the pyarrow
         Parquet reader: ``columns=`` prunes to the catalog's physical
         columns (the Python DS API exposes no narrower per-query column
-        set), ``filter=`` pushes every compilable pushed filter down to the
-        scan, where Parquet row-group statistics prune within the file —
-        the row-group-granular analogue of the partition-level rowkey
-        pruning in ``partitions()``. Returns (table, leftover_filters) —
-        leftovers are filters naming physical columns absent from the file.
-        """
+        set), ``filter=`` pushes every pushed filter over a present column
+        down to the scan, where Parquet row-group statistics prune within
+        the file — the row-group-granular analogue of the partition-level
+        rowkey pruning in ``partitions()``. Returns (table,
+        leftover_filters) — leftovers are filters naming physical columns
+        absent from the file (a missing cell decodes to NULL, so e.g.
+        IsNull over a phantom column is all-True)."""
         import pyarrow.dataset as pads
 
         ds = pads.dataset(partition.path, format="parquet")
@@ -273,14 +240,20 @@ class HbaseKVReader(DataSourceReader):
             for f in self.out_schema.fields
             if self._phys(f.name) in present
         ]
-        expr, rest = self._ds_filter_expr(present)
+        in_file, rest = [], []
+        for f in self.pushed:
+            inner = f.child if isinstance(f, Not) else f
+            (in_file if self._phys(inner.attribute[0]) in present else rest).append(f)
+        expr = self._filter_expr(in_file, self._phys)
         return ds.to_table(columns=columns, filter=expr), rest
 
-    def _ds_filter_expr(self, present: set[str]):
-        """AND of pushed filters as ONE pyarrow dataset expression over
-        physical column names; filters naming absent columns are returned
-        for post-projection evaluation (a missing cell decodes to NULL, so
-        e.g. IsNull over a phantom column is all-True)."""
+    @staticmethod
+    def _filter_expr(filters: list[Filter], name):
+        """AND of filters as ONE pyarrow dataset expression, the analogue
+        of the reference's FilterList(MUST_PASS_ALL); ``name`` maps a
+        filter's logical column to the column it is evaluated on. Both the
+        scan and ``Table.filter`` drop rows whose expression is NULL —
+        exactly SQL's WHERE semantics."""
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
@@ -313,42 +286,25 @@ class HbaseKVReader(DataSourceReader):
                 return pc.ends_with(fld, f.value)
             if isinstance(f, StringContains):
                 return pc.match_substring(fld, f.value)
-            return None
+            raise TypeError(f"unsupported pushed filter {f!r}")
 
         expr = None
-        rest: list[Filter] = []
-        for f in self.pushed:
+        for f in filters:
             inner = f.child if isinstance(f, Not) else f
-            phys = self._phys(inner.attribute[0])
-            if phys not in present:
-                rest.append(f)
-                continue
-            e = leaf(inner, pads.field(phys))
-            if e is None:  # pragma: no cover - pushFilters only accepts known
-                rest.append(f)
-                continue
+            e = leaf(inner, pads.field(name(inner.attribute[0])))
             if isinstance(f, Not):
-                # Kleene ~: NULL stays NULL and the scan filter drops it —
-                # exactly SQL's WHERE NOT(...) semantics
+                # Kleene ~: NULL stays NULL and is dropped — exactly SQL's
+                # WHERE NOT(...) semantics
                 e = ~e
             expr = e if expr is None else expr & e
-        return expr, rest
+        return expr
 
     # ------------------------------------------------------------ helpers --
     def _phys(self, logical: str) -> str:
-        col = self.catalog.columns[logical]
-        if col.is_rowkey or self.physical_naming == "column":
-            return col.column
-        return f"{col.column_family}:{col.column}"
+        return physical_name(self.catalog, logical, self.physical_naming)
 
     def _data_files(self) -> list[str]:
-        if os.path.isdir(self.path):
-            return sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith(".parquet")
-            )
-        return [self.path]
+        return data_files(self.path)
 
     def _rowkey_bounds(self):
         """(lo, hi) bounds implied by pushed rowkey range/equality filters."""
@@ -370,57 +326,6 @@ class HbaseKVReader(DataSourceReader):
                 lo = min(vs) if lo is None else max(lo, min(vs))
                 hi = max(vs) if hi is None else min(hi, max(vs))
         return lo, hi
-
-    def _compile_filters(self, table, filters: list[Filter] | None = None):
-        """Filter objects -> one pyarrow boolean mask (AND-combined) over the
-        logical projection, the analogue of the reference's
-        FilterList(MUST_PASS_ALL). Defaults to every pushed filter; the scan
-        path passes only the leftovers the dataset reader couldn't take."""
-        import pyarrow.compute as pc
-
-        def leaf(f, col):
-            if isinstance(f, EqualTo):
-                return pc.equal(col, f.value)
-            if isinstance(f, EqualNullSafe):
-                if f.value is None:
-                    return pc.is_null(col)
-                return pc.and_kleene(pc.is_valid(col), pc.equal(col, f.value))
-            if isinstance(f, In):
-                import pyarrow as pa
-
-                return pc.is_in(col, value_set=pa.array(list(f.value), type=col.type))
-            if isinstance(f, IsNull):
-                return pc.is_null(col)
-            if isinstance(f, IsNotNull):
-                return pc.is_valid(col)
-            if isinstance(f, LessThan):
-                return pc.less(col, f.value)
-            if isinstance(f, LessThanOrEqual):
-                return pc.less_equal(col, f.value)
-            if isinstance(f, GreaterThan):
-                return pc.greater(col, f.value)
-            if isinstance(f, GreaterThanOrEqual):
-                return pc.greater_equal(col, f.value)
-            if isinstance(f, StringStartsWith):
-                return pc.starts_with(col, f.value)
-            if isinstance(f, StringEndsWith):
-                return pc.ends_with(col, f.value)
-            if isinstance(f, StringContains):
-                return pc.match_substring(col, f.value)
-            return None
-
-        mask = None
-        for f in self.pushed if filters is None else filters:
-            inner = f.child if isinstance(f, Not) else f
-            col = table.column(inner.attribute[0])
-            m = leaf(inner, col)
-            if m is None:  # pragma: no cover - pushFilters only accepts known
-                continue
-            if isinstance(f, Not):
-                m = pc.invert(m)  # Kleene: NULL -> NULL, filled False below
-            m = pc.fill_null(m, False)
-            mask = m if mask is None else pc.and_(mask, m)
-        return mask
 
 
 class HbaseKVStreamReader(DataSourceStreamReader):
@@ -472,7 +377,7 @@ class HbaseKVStreamReader(DataSourceStreamReader):
     def _names(self) -> list[str]:
         if not os.path.isdir(self.path):
             raise ValueError(f"streaming source path must be a directory: {self.path}")
-        return sorted(f for f in os.listdir(self.path) if f.endswith(".parquet"))
+        return [os.path.basename(f) for f in data_files(self.path)]
 
     def latestOffset(self) -> dict:
         names = self._names()
@@ -570,12 +475,6 @@ def _stage_flush_file(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    def phys(logical: str) -> str:
-        col = catalog.columns[logical]
-        if col.is_rowkey or physical_naming == "column":
-            return col.column
-        return f"{col.column_family}:{col.column}"
-
     rows = list(iterator)
     if not rows:
         return FlushCommitMessage(staged="", rows=0)
@@ -583,8 +482,10 @@ def _stage_flush_file(
     for f in schema.fields:
         vals = [r[f.name] for r in rows]
         arrays.append(pa.array(vals, type=_arrow_type(f.dataType)))
-        names.append(phys(f.name))
-    tbl = pa.table(dict(zip(names, arrays))).sort_by(phys(catalog.rowkey))
+        names.append(physical_name(catalog, f.name, physical_naming))
+    tbl = pa.table(dict(zip(names, arrays))).sort_by(
+        physical_name(catalog, catalog.rowkey, physical_naming)
+    )
     os.makedirs(staging, exist_ok=True)
     staged = os.path.join(staging, uuid.uuid4().hex + ".parquet")
     pq.write_table(tbl, staged)
@@ -636,9 +537,8 @@ class HbaseKVBatchWriter(DataSourceWriter):
     def commit(self, messages) -> None:
         nonempty = [m for m in messages if m is not None and m.staged]
         if self.overwrite:
-            for f in list(os.listdir(self.path)):
-                if f.endswith(".parquet"):
-                    os.remove(os.path.join(self.path, f))
+            for f in data_files(self.path):
+                os.remove(f)
         for i, m in enumerate(nonempty):
             dst = os.path.join(self.path, f"batch-{self.job_token}-{i:05d}.parquet")
             os.replace(m.staged, dst)
@@ -671,5 +571,8 @@ def _arrow_type(spark_type):
 
 
 def register_hbasekv(spark) -> None:
-    """Register the source so ``spark.read.format('hbasekv')`` works."""
+    """Register the source so ``spark.read.format('hbasekv')`` works. The
+    reader negotiates ``pushFilters``, which Spark only calls (and
+    otherwise refuses the read) with Python filter pushdown enabled."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(HbaseKVDataSource)

@@ -19,14 +19,17 @@ query compiler in front of the source would:
   100 TB scan — the exact economics of DSv2 aggregate pushdown.
 - :func:`head_by_rowkey` — TopN-by-rowkey (``ORDER BY rowkey LIMIT n``)
   reading only the file prefix that can contain the lowest n rowkeys.
-  ``write_table``'s ``repartitionByRange(rowkey)`` layout gives
-  (near-)non-overlapping per-file rowkey ranges, so a prefix of the
-  rk_min-sorted manifest with ``cumsum(rows) >= n`` bounds the read
-  set; a later file can only matter if its rk_min undercuts the chosen
-  prefix's max bound, and exactly those files are added back — the
-  selection is therefore correct for ANY layout, merely tighter for
-  sorted ones. The final ``orderBy(rowkey).limit(n)`` plans as
-  TakeOrderedAndProject over the tiny pruned scan.
+  Planning is one driver-side footer read per file
+  (``layout.file_bounds``: row count and rowkey min/max, no Spark job —
+  the region directory analogue). ``write_table``'s
+  ``repartitionByRange(rowkey)`` layout gives (near-)non-overlapping
+  per-file rowkey ranges, so a prefix of the rk_min-sorted files with
+  ``cumsum(rows) >= n`` bounds the read set; a later file can only
+  matter if its rk_min undercuts the chosen prefix's max bound, and
+  exactly those files are added back — the selection is therefore
+  correct for ANY layout, merely tighter for sorted ones. The final
+  ``orderBy(rowkey).limit(n)`` plans as TakeOrderedAndProject over the
+  tiny pruned scan.
 
 Honesty notes baked into the implementation:
 
@@ -44,7 +47,6 @@ Honesty notes baked into the implementation:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,21 +54,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_hbase_connector_spark.sources.catalog import TableCatalog, parse_catalog
-from spark_hbase_connector_spark.sources.table import _physical_name, load_table
+from spark_hbase_connector_spark.sources.layout import (
+    data_files,
+    file_bounds,
+    physical_name,
+)
+from spark_hbase_connector_spark.sources.table import load_table
 
-__all__ = ["footer_stats_agg", "head_by_rowkey", "file_manifest", "HeadPlan"]
+__all__ = ["footer_stats_agg", "head_by_rowkey", "HeadPlan"]
 
 
 def _as_catalog(catalog) -> TableCatalog:
     return catalog if isinstance(catalog, TableCatalog) else parse_catalog(catalog)
-
-
-def _data_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-        )
-    return [path]
 
 
 def _files_df(spark: SparkSession, files: list[str]) -> DataFrame:
@@ -114,8 +113,8 @@ def footer_stats_agg(
             "pushes aggregates when no residual predicate remains)"
         )
     rk = cat.rowkey
-    phys_rk = _physical_name(cat, rk, physical_naming)
-    phys_aggs = {c: _physical_name(cat, c, physical_naming) for c in agg_columns}
+    phys_rk = physical_name(cat, rk, physical_naming)
+    phys_aggs = {c: physical_name(cat, c, physical_naming) for c in agg_columns}
     col_types = {c: cat.columns[c].spark_type(c) for c in agg_columns}
     lo, hi = rowkey_range if rowkey_range is not None else (None, None)
 
@@ -260,7 +259,7 @@ def footer_stats_agg(
                     row[f"max_{c}"] = col_partials[c]["max"]
                 yield pd.DataFrame([row])
 
-    partials = _files_df(spark, _data_files(path)).mapInPandas(
+    partials = _files_df(spark, data_files(path)).mapInPandas(
         per_file, schema=partial_schema
     )
     aggs = [
@@ -273,62 +272,6 @@ def footer_stats_agg(
         aggs.append(F.min(f"min_{c}").alias(f"min_{c}"))
         aggs.append(F.max(f"max_{c}").alias(f"max_{c}"))
     return partials.agg(*aggs)
-
-
-def file_manifest(
-    spark: SparkSession, path: str, catalog, physical_naming: str = "cf:col"
-) -> DataFrame:
-    """Distributed footer pass -> one row per data file:
-    ``(path, n_rows, rk_min, rk_max)``. rk bounds are NULL when any row
-    group lacks rowkey statistics. This is the planner-side metadata
-    relation (region directory analogue) that :func:`head_by_rowkey`
-    consumes; at 100 TB it is n_files footer reads, collected as one
-    row per file — planner-scale, not data-scale."""
-    cat = _as_catalog(catalog)
-    phys_rk = _physical_name(cat, cat.rowkey, physical_naming)
-    rk_type = cat.columns[cat.rowkey].spark_type(cat.rowkey)
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("n_rows", T.LongType()),
-            T.StructField("rk_min", rk_type),
-            T.StructField("rk_max", rk_type),
-        ]
-    )
-
-    def per_file(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for fp in pdf["path"]:
-                meta = pq.ParquetFile(fp).metadata
-                names = {
-                    meta.schema.column(i).name: i for i in range(meta.num_columns)
-                }
-                rmin = rmax = None
-                ok = phys_rk in names
-                for rg in range(meta.num_row_groups):
-                    if not ok:
-                        break
-                    st = meta.row_group(rg).column(names[phys_rk]).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    rmin = st.min if rmin is None else min(rmin, st.min)
-                    rmax = st.max if rmax is None else max(rmax, st.max)
-                rows.append(
-                    {
-                        "path": fp,
-                        "n_rows": meta.num_rows,
-                        "rk_min": rmin if ok else None,
-                        "rk_max": rmax if ok else None,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return _files_df(spark, _data_files(path)).mapInPandas(per_file, schema=schema)
 
 
 @dataclass
@@ -372,7 +315,9 @@ def head_by_rowkey(
     if n < 1:
         raise ValueError("head_by_rowkey: n must be >= 1")
     cat = _as_catalog(catalog)
-    manifest = file_manifest(spark, path, cat, physical_naming).collect()
+    manifest = file_bounds(
+        data_files(path), physical_name(cat, cat.rowkey, physical_naming)
+    )
     files_total = len(manifest)
     known = sorted(
         (r for r in manifest if r.rk_min is not None), key=lambda r: r.rk_min

@@ -21,9 +21,9 @@ Catalyst + Parquet already do natively. So the PySpark-native equivalent is
   narrowing scan bounds, ``HbasePartitionReader.scala:147``).
 
 Physical naming: ``write_table`` stores columns under ``cf:qualifier`` and
-the rowkey under its catalog ``col`` qualifier (one convention shared with
-``_physical_name`` and the DS reader, so rowkeys whose ``col`` differs from
-the logical name round-trip); ``load_table`` also accepts plain
+the rowkey under its catalog ``col`` qualifier (one convention,
+``layout.physical_name``, shared with the DS reader, so rowkeys whose ``col``
+differs from the logical name round-trip); ``load_table`` also accepts plain
 qualifier-named Parquet (``physical_naming="column"``) so external datasets
 (e.g. the driver's testdata) can be described by a catalog without rewrite.
 """
@@ -39,21 +39,7 @@ from spark_hbase_connector_spark.sources.catalog import (
     TableCatalog,
     parse_catalog,
 )
-
-
-def _physical_name(cat: TableCatalog, logical: str, naming: str) -> str:
-    # ONE convention everywhere: the rowkey lives under ``col.column`` in
-    # both naming modes (write_table stores it there too). A catalog may
-    # declare a rowkey whose ``col`` differs from the logical name; mixing
-    # conventions made that round-trip read an all-NULL rowkey.
-    col = cat.columns[logical]
-    if col.is_rowkey:
-        return col.column
-    if naming == "column":
-        return col.column
-    if naming == "cf:col":
-        return f"{col.column_family}:{col.column}"
-    raise ValueError(f"unknown physical_naming {naming!r}")
+from spark_hbase_connector_spark.sources.layout import physical_name
 
 
 def _physical_schema(cat: TableCatalog, naming: str, overrides: dict | None = None):
@@ -70,7 +56,7 @@ def _physical_schema(cat: TableCatalog, naming: str, overrides: dict | None = No
     return T.StructType(
         [
             T.StructField(
-                _physical_name(cat, name, naming),
+                physical_name(cat, name, naming),
                 type_for(overrides[name], name) if name in overrides else col.spark_type(name),
             )
             for name, col in cat.columns.items()
@@ -142,7 +128,7 @@ def load_table(
     physical_types = {f.name: f.dataType for f in raw.schema.fields}
     projections = []
     for name, col in cat.columns.items():
-        phys = _physical_name(cat, name, physical_naming)
+        phys = physical_name(cat, name, physical_naming)
         typ = col.spark_type(name)
         if phys in physical_types:
             expr = _adapt(F.col(f"`{phys}`"), physical_types[phys], typ)
@@ -230,13 +216,9 @@ def write_bucketed(
     co-location — complementary layouts.)
     """
     cat = catalog if isinstance(catalog, TableCatalog) else parse_catalog(catalog)
-    rk = cat.columns[cat.rowkey].column
-    renames = []
-    for name, col in cat.columns.items():
-        phys = col.column if col.is_rowkey else f"{col.column_family}:{col.column}"
-        renames.append(F.col(name).alias(phys))
+    rk = physical_name(cat, cat.rowkey, "cf:col")
     (
-        df.select(*renames)
+        df.select(*[F.col(n).alias(physical_name(cat, n, "cf:col")) for n in cat.columns])
         .write.mode(mode)
         .bucketBy(buckets, rk)
         .sortBy(rk)
@@ -281,25 +263,16 @@ def write_table(
     part_cols = (
         [partition_by] if isinstance(partition_by, str) else list(partition_by or [])
     )
-    out = df
-    renames = []
-    rowkey_phys = None
-    part_phys: list[str] = []
-    for name, col in cat.columns.items():
-        # rowkey stored under col.column — same convention as _physical_name.
-        # Partition columns are directory-encoded, so they also use the bare
-        # qualifier (':' in a 'cf:col' directory name is not portable);
-        # load_table resolves them via its qualifier fallback.
-        if col.is_rowkey or name in part_cols:
-            phys = col.column
-        else:
-            phys = f"{col.column_family}:{col.column}"
-        if col.is_rowkey:
-            rowkey_phys = phys
-        if name in part_cols:
-            part_phys.append(phys)
-        renames.append(F.col(name).alias(phys))
-    out = out.select(*renames)
+    # Partition columns are directory-encoded, so they use the bare
+    # qualifier (':' in a 'cf:col' directory name is not portable);
+    # load_table resolves them via its qualifier fallback.
+    phys = {
+        name: col.column if name in part_cols else physical_name(cat, name, "cf:col")
+        for name, col in cat.columns.items()
+    }
+    rowkey_phys = phys[cat.rowkey]
+    part_phys = [p for name, p in phys.items() if name in part_cols]
+    out = df.select(*[F.col(name).alias(p) for name, p in phys.items()])
     # range-partition/sort on the rowkey WITHIN each output task; with
     # hive partitioning the writer splits each task's rows by directory,
     # so files stay rowkey-sorted per partition directory

@@ -27,7 +27,6 @@ CATALOG = {
 
 @pytest.fixture(scope="module")
 def registered(spark):
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_hbasekv(spark)
     return spark
 
@@ -89,6 +88,49 @@ def test_typed_negative_comparison(registered, sf_dir):
         .count()
     )
     assert got == expect > 0
+
+
+def test_register_enables_filter_pushdown(spark, sf_dir):
+    """register_hbasekv alone makes a filtered read work: the reader
+    negotiates pushFilters, which Spark refuses with Python filter
+    pushdown disabled."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    register_hbasekv(spark)
+    df = _read(spark, f"{sf_dir}/customer.parquet")
+    assert df.where(F.col("c_custkey") <= 5).count() == 6  # custkeys start at 0
+
+
+def test_get_outside_every_file_and_empty_table(registered, tmp_path):
+    """A rowkey no file can hold prunes every partition, and an empty
+    table directory has none: both reads return no rows (Spark then calls
+    read() without a partition)."""
+    src = registered.createDataFrame(
+        [Row(c_custkey=i, c_name=f"n{i}", c_acctbal=1.0) for i in range(100)]
+    )
+    written = {k: v for k, v in CATALOG["columns"].items() if k != "c_phantom"}
+    out = str(tmp_path / "oob")
+    write_table(src, {**CATALOG, "columns": written}, out, num_partitions=4)
+    df = _read(registered, out, physical_naming="cf:col")
+    assert df.where(F.col("c_custkey") == 10**9).collect() == []
+    assert df.where(F.col("c_custkey").isin(-5, 10**9)).collect() == []
+    assert df.where(F.col("c_custkey") == 42).count() == 1
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert _read(registered, str(empty)).collect() == []
+
+
+def test_unknown_physical_naming_is_rejected(registered, sf_dir, tmp_path):
+    """hbasekv read and write reject a physical_naming they do not know
+    instead of silently reading or writing 'cf:col' names."""
+    with pytest.raises(Exception, match="unknown physical_naming"):
+        _read(registered, f"{sf_dir}/customer.parquet", physical_naming="cf_col").collect()
+    df = registered.createDataFrame([Row(c_custkey=1, c_name="a", c_acctbal=1.0)])
+    with pytest.raises(Exception, match="unknown physical_naming"):
+        (df.write.format("hbasekv")
+            .option("catalog", json.dumps(CATALOG))
+            .option("path", str(tmp_path / "w"))
+            .option("physical_naming", "qualifier")
+            .mode("append").save())
 
 
 def test_scan_pushes_columns_and_filter_into_reader(spark, sf_dir):

@@ -7,14 +7,15 @@ fallback, and sparse-column (declared-never-written) aggregation."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from spark_hbase_connector_spark.sources.layout import data_files, file_bounds
 from spark_hbase_connector_spark.sources.stats_scan import (
-    file_manifest,
     footer_stats_agg,
     head_by_rowkey,
 )
@@ -185,13 +186,66 @@ def test_stats_absent_fallback(spark, tmp_path):
 
 
 def test_manifest_bounds(spark, dataset):
-    rows = file_manifest(spark, dataset, CATALOG).collect()
+    rows = file_bounds(data_files(dataset), "k")
     assert len(rows) == N_FILES
     assert sum(r.n_rows for r in rows) == N_ROWS
     # write_table layout: non-overlapping rowkey ranges across files
     spans = sorted((r.rk_min, r.rk_max) for r in rows)
     for (a_lo, a_hi), (b_lo, b_hi) in zip(spans, spans[1:]):
         assert a_hi < b_lo
+
+
+def test_head_by_rowkey_plans_without_spark_jobs(spark, dataset):
+    """Planning is a driver-side footer read: head_by_rowkey launches no
+    Spark job beyond what building its load_table read over the selected
+    files launches by itself (Spark's parquet schema inference)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("head-plan", "head_by_rowkey planning")
+        plan = head_by_rowkey(spark, dataset, CATALOG, n=25)
+        sc.setJobGroup("head-read", "the same read built directly")
+        load_table(spark, CATALOG, plan.files_selected, physical_naming="cf:col")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("head-plan")) == len(
+        tracker.getJobIdsForGroup("head-read")
+    )
+
+
+def test_every_planner_lists_the_same_files(spark, dataset, tmp_path):
+    """A table directory also holding non-data files: every reader of the
+    layout agrees with Spark's own listing (``_``/``.``-prefixed files
+    are not data)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_hbase_connector_spark.operators.compaction import plan_compaction
+    from spark_hbase_connector_spark.sources.python_datasource import (
+        register_hbasekv,
+    )
+
+    p = str(tmp_path / "stray")
+    shutil.copytree(dataset, p)
+    pq.write_table(
+        pa.table({"k": [N_ROWS + 1, N_ROWS + 2], "d:v": [0.0, 0.0], "d:s": ["x", "y"]}),
+        os.path.join(p, "_stray.parquet"),
+    )
+    assert load_table(spark, CATALOG, p, physical_naming="cf:col").count() == N_ROWS
+    register_hbasekv(spark)
+    kv = (
+        spark.read.format("hbasekv")
+        .option("catalog", json.dumps(CATALOG))
+        .option("path", p)
+        .option("physical_naming", "cf:col")
+        .load()
+    )
+    assert kv.count() == N_ROWS
+    assert footer_stats_agg(spark, p, CATALOG).first().n_total == N_ROWS
+    plan = head_by_rowkey(spark, p, CATALOG, n=N_ROWS + 5)
+    assert plan.files_total == N_FILES
+    assert plan.df.count() == N_ROWS
+    assert sum(len(g) for g in plan_compaction(p)) == N_FILES
 
 
 def test_head_by_rowkey_prunes_and_matches(spark, dataset):
