@@ -25,10 +25,9 @@ edges-side join then reuses the cached layout instead of re-shuffling the
 edge list (the partition count is pinned explicitly so AQE can't coalesce
 it out from under the join's distribution requirement). Each fused round
 localCheckpoints the label relation — without it the plan doubles per
-iteration and Catalyst re-optimizes the whole history. For adversarial
-long-chain graphs at 100 TB swap in alternating small-star/large-star
-contraction (same join primitives, O(log n) rounds); for dedup workloads
-plain propagation converges faster because cluster diameters are constant.
+iteration and Catalyst re-optimizes the whole history. Rounds grow with
+the graph's diameter, which is constant for dedup clusters; a chain deeper
+than ``2*max_iter`` raises instead of returning unconverged labels.
 """
 
 from __future__ import annotations
@@ -130,14 +129,12 @@ def connected_components(
             break
     else:
         # returning silently-unconverged labels is a correctness bug (a
-        # chain deeper than 2*max_iter would get WRONG components);
-        # surface it loudly and point at the O(log n) alternative
+        # chain deeper than 2*max_iter would get WRONG components)
         edges.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} fused "
-            "double-hops (graph diameter > 2*max_iter). Raise max_iter or "
-            "use connected_components_star (O(log n) rounds) for "
-            "chain-heavy graphs."
+            "double-hops (graph diameter > 2*max_iter); raise max_iter "
+            "above half the graph's diameter."
         )
     edges.unpersist()
     return labels
@@ -214,114 +211,3 @@ def pagerank(
     nodes.unpersist()
     return ranks
 
-
-def connected_components_star(
-    pairs: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction — the O(log n)-round algorithm for graphs with LONG
-    chains, where plain min-label propagation (`connected_components`)
-    needs O(diameter) rounds. Same (id, comp) output contract.
-
-    Each round: large-star hangs every larger neighbor of u onto
-    min(N(u) ∪ {u}); small-star (on max-canonicalized edges) re-hangs all
-    smaller neighbors and u itself onto that minimum. The edge set
-    contracts toward stars rooted at component minima; at the fixpoint
-    every edge is (node, root). Convergence is detected with an
-    order-independent edge-set checksum (count + hash-sum) — one tiny
-    aggregation per round instead of a full set comparison.
-
-    Scale: each round is two groupBy-min aggregations + joins keyed on
-    node ids (all partial-aggregated), and the edge set only shrinks or
-    re-targets — no round ever multiplies edges beyond the symmetrized
-    input. The INPUT edge relation is eagerly localCheckpointed before
-    the loop: round 1's symmetrize-and-join DAG consumes it four times,
-    and without materialization each consumption re-executes the whole
-    upstream pair-generation pipeline (for dedup graphs, the corpus-sized
-    candidate join) concurrently inside one job — at sf100 that filled
-    59 GB of shuffle spill and died on disk, with the checkpoint it runs
-    in bounded space. Superseded per-round checkpoints are released
-    best-effort so a deep-chain run's disk footprint stays ~2 edge sets
-    rather than max_iter of them. Use this for diameter-heavy graphs; for
-    dedup cliques the propagation loop converges in fewer
-    materializations.
-    """
-    E = (
-        pairs.select(F.col(id1).alias("u"), F.col(id2).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    # remember every vertex: star contraction drops edges of already-
-    # rooted nodes, but the output must cover all of them.
-    # ORDERING INVARIANT (ADVICE r8, tightened r10): this must be an
-    # EAGER localCheckpoint (lineage-truncated), created BEFORE the loop.
-    # _release() below frees the superseded checkpoints' storage blocks,
-    # making those DataFrames permanently unrecomputable — round 1
-    # releases the INITIAL E, so anything still derived from it by
-    # lineage (a merely-persisted all_nodes was: unpersist-then-return
-    # handed the caller a frame that recomputed all_nodes from the freed
-    # initial checkpoint and died with "checkpoint block not found")
-    # must own its blocks outright. Like the returned labels, all_nodes
-    # is caller-owned: its blocks live while the returned frame does and
-    # the ContextCleaner reclaims them when the caller's reference dies.
-    all_nodes = (
-        E.select(F.col("u").alias("id"))
-        .unionByName(E.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = None
-    for _ in range(max_iter):
-        sym = E.unionByName(
-            E.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        m = mins.select("u", F.least("mn", F.col("u")).alias("m"))
-        large = (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        can = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m2 = can.groupBy("u").agg(F.min("v").alias("mn"))
-        hang_neighbors = (
-            can.join(m2, "u")
-            .where(F.col("v") != F.col("mn"))
-            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-        )
-        hang_self = m2.select("u", F.col("mn").alias("v"))
-        prev_E = E
-        E = (
-            hang_neighbors.unionByName(hang_self)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        _release(prev_E)
-        # hash-sum in modular space: raw xxhash64 sums overflow ANSI
-        # long addition on large edge sets
-        chk = E.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1_000_000_007))),
-                F.lit(0),
-            ).alias("h"),
-        ).collect()[0]
-        cur = (chk.n, chk.h)
-        if cur == prev:
-            break
-        prev = cur
-    labels = E.select(F.col("u").alias("id"), F.col("v").alias("comp"))
-    roots = all_nodes.join(labels, "id", "left_anti").select(
-        "id", F.col("id").alias("comp")
-    )
-    return labels.unionByName(roots)

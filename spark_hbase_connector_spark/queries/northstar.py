@@ -466,9 +466,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(d, "text", "doc_id", max_hamming=3)
 
 
-@query(
-    "dedup_components_star",
-    oracle=f"""
+# Exact Jaccard>=0.85 near-dup pairs, then components via the bounded
+# min-label closure; shared by both duplicate-cluster entries.
+_DUCK_COMPONENTS = f"""
     WITH RECURSIVE {_DUCK_SHINGLES},
     post AS (SELECT doc_id, unnest(shs) AS s FROM sh),
     sizes AS (SELECT doc_id, len(shs) AS n FROM sh),
@@ -488,51 +488,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes AS MATERIALIZED (SELECT DISTINCT a AS id FROM edges),
     {duck_cc_min_label('nodes')}
     SELECT id AS doc_id, component FROM comp
-    """,
-    tags=("dedup", "graph", "star"),
-)
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME duplicate-cluster assignment as `dedup_components`, via
-    the alternating large-star/small-star contraction
-    (`operators/graph.py:connected_components_star`) instead of min-label
-    propagation — O(log n) rounds regardless of component diameter, the
-    documented swap for chain-heavy graphs (a 100k-node path resolves in
-    ~20 rounds where propagation needs ~50k). Sharing `dedup_components`'
-    recursive-CTE oracle differentially proves the two algorithms agree
-    on real near-dup graphs end-to-end."""
-    from spark_hbase_connector_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    pairs = shingle_jaccard_pairs_prefix(d, "text", "doc_id", threshold=0.85)
-    comp = connected_components_star(pairs.select("id1", "id2"))
-    return comp.select(F.col("id").alias("doc_id"), F.col("comp").alias("component"))
+    """
 
 
 @query(
     "dedup_components",
-    oracle=f"""
-    WITH RECURSIVE {_DUCK_SHINGLES},
-    post AS (SELECT doc_id, unnest(shs) AS s FROM sh),
-    sizes AS (SELECT doc_id, len(shs) AS n FROM sh),
-    inter AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS i
-      FROM post a JOIN post b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    prs AS (
-      SELECT id1, id2 FROM inter
-      JOIN sizes sa ON id1 = sa.doc_id
-      JOIN sizes sb ON id2 = sb.doc_id
-      WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.85
-    ),
-    edges AS MATERIALIZED (SELECT id1 AS a, id2 AS b FROM prs
-              UNION ALL SELECT id2, id1 FROM prs),
-    nodes AS MATERIALIZED (SELECT DISTINCT a AS id FROM edges),
-    {duck_cc_min_label('nodes')}
-    SELECT id AS doc_id, component FROM comp
-    """,
+    oracle=_DUCK_COMPONENTS,
     tags=("dedup", "graph"),
     bench=True,
 )
@@ -543,11 +504,23 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     source is the prefix-filter scale path (output-identical to the naive
     inverted-index join; candidate volume Σpf(s)² not Σdf(s)² — r7, same
     principle as `split_leakage_safe`'s rebind). The oracle replays the
-    pairs plus a recursive-CTE reachability closure."""
+    pairs plus a bounded min-label closure."""
     d = load(spark, sf_dir, "documents")
     pairs = shingle_jaccard_pairs_prefix(d, "text", "doc_id", threshold=0.85)
     comp = connected_components(pairs)
     return comp.select(F.col("id").alias("doc_id"), F.col("comp").alias("component"))
+
+
+@query(
+    "dedup_components_star",
+    oracle=_DUCK_COMPONENTS,
+    tags=("dedup", "graph"),
+)
+def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kept for the `__spark_entry__` contract, which lists every registry
+    entry; it runs the same code as `dedup_components`. The name is historical
+    (SCALE.md, "Connected components: one algorithm")."""
+    return dedup_components(spark, sf_dir)
 
 
 @query(

@@ -662,45 +662,53 @@ def test_pca_recovers_planted_axes(spark):
     assert got == got2 and list(ratios) == list(ratios2)
 
 
-def test_star_components_long_chain_matches_propagation(spark):
-    """A 200-node path (diameter 199 — propagation's worst case) plus a
-    clique and an isolated pair: star contraction must produce the same
-    components as min-label propagation, in far fewer rounds."""
-    from spark_hbase_connector_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+def _union_find_components(edges):
+    """Reference labels {(node, min node of its component)} by union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in list(parent)}
+
+
+def test_components_long_chain_matches_union_find(spark):
+    """A 200-node path (diameter 199, propagation's worst case) plus a
+    clique and an isolated pair: with enough budget propagation matches
+    union-find exactly, and with too little it raises."""
+    from spark_hbase_connector_spark.operators.graph import connected_components
 
     import pytest as _pytest
 
     edges = [(i, i + 1) for i in range(1, 200)]
     edges += [(500, 501), (501, 502), (500, 502), (900, 901)]
     df = spark.createDataFrame(edges, ["id1", "id2"])
-    star = {(r.id, r.comp) for r in connected_components_star(df).collect()}
-    # propagation needs diameter/2 fused rounds; with enough budget the
-    # two algorithms agree exactly
     prop = {(r.id, r.comp) for r in connected_components(df, max_iter=120).collect()}
-    assert star == prop
-    assert {(i, 1) for i in range(1, 201)} <= star
-    # and an insufficient budget must FAIL LOUDLY, never return wrong labels
+    assert prop == _union_find_components(edges)
+    assert {(i, 1) for i in range(1, 201)} <= prop
+    # an insufficient budget must FAIL LOUDLY, never return wrong labels
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=10)
 
 
-def test_star_components_random_graph_equivalence(spark):
-    """Pseudo-random graph: star contraction and propagation must agree
-    exactly (deterministic edge synthesis, no rand())."""
-    from spark_hbase_connector_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+def test_components_random_graph_matches_union_find(spark):
+    """Pseudo-random graph (deterministic edge synthesis, no rand()):
+    propagation matches union-find exactly."""
+    from spark_hbase_connector_spark.operators.graph import connected_components
 
     edges = [((i * 37) % 150, (i * 91 + 13) % 150) for i in range(120)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, ["id1", "id2"])
-    star = {(r.id, r.comp) for r in connected_components_star(df).collect()}
     prop = {(r.id, r.comp) for r in connected_components(df).collect()}
-    assert star == prop
+    assert prop == _union_find_components(edges)
 
 
 def test_dense_time_grid_guard(spark):
