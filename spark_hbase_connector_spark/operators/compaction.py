@@ -8,11 +8,10 @@ every scan pays per-file open/footer costs, rowkey-range pruning
 degrades (each file covers a sliver), and the file listing itself becomes
 a driver cost. HBase answers with minor compaction
 (``HbaseConnectionUtil.scala:8-43`` is where the reference's live store
-would do it server-side); the engine has two granularities: `sources/table.py:compact_table`
-rewrites a WHOLE table through the catalog (major compaction — one
-range-shuffled job, fresh global layout), while `compact_flush_files`
-below is the minor compaction: incremental, file-level, no shuffle,
-leaves right-sized files alone.
+would do it server-side); `compact_flush_files` below is that minor
+compaction: incremental, file-level, no shuffle, leaves right-sized
+files alone. (A whole-table major compaction is an in-place
+`write_table(load_table(...), catalog, path, num_partitions)` rewrite.)
 
 Design for 100 TB:
 - `plan_compaction` is pure FILE-LEVEL math (sizes from the filesystem
@@ -25,23 +24,13 @@ Design for 100 TB:
   coalesce(1) — a map-only re-encode, no shuffle: inputs are
   rowkey-sorted and (by the writer contract) non-overlapping in
   time-order, so concatenation in file order preserves the global range
-  layout. Replacement is two-phase with a per-group MANIFEST: first the
-  group's input-file list is written atomically (tmp + rename) as
-  ``<dest>.parquet.compacted.manifest``, then the merged file lands as
-  ``<dest>.parquet.compacted``, then the inputs are deleted, then the
-  final rename publishes, then the manifest is removed. Crash contract
-  (`recover_compaction` runs at the start of every `compact_flush_files`
-  and is idempotent):
-  - manifest only, no ``.compacted`` file: nothing was published — drop
-    the orphan manifest, inputs are intact. (This state also occurs
-    AFTER a successful publish rename but before manifest cleanup;
-    inputs are already gone then, so dropping the manifest is correct
-    in both.)
-  - ``.compacted`` file present: the merged data is durable — delete
-    every manifest-listed input still on disk, THEN finish the rename.
-    This closes the window where the merged file and some inputs
-    coexist; without the manifest delete-first step, recovery would
-    permanently duplicate the surviving inputs' rows.
+  layout.
+
+Crash contract: each group is one ``layout.commit`` (a manifest swap)
+that lists the merged file, under a fresh name sorting where the group's
+first file did, and retires the group. A crash leaves the inputs or the
+merged file listed, never both; if a concurrent writer already removed
+an input, the commit raises and nothing is published.
 """
 
 from __future__ import annotations
@@ -52,7 +41,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from spark_hbase_connector_spark.sources.layout import data_files
+from spark_hbase_connector_spark.sources.layout import commit, data_files
 
 
 def plan_compaction(path: str, target_bytes: int = 128 * 1024 * 1024) -> list[list[str]]:
@@ -75,55 +64,6 @@ def plan_compaction(path: str, target_bytes: int = 128 * 1024 * 1024) -> list[li
     return groups
 
 
-_MANIFEST_SUFFIX = ".parquet.compacted.manifest"
-
-
-def _write_manifest(manifest_path: str, inputs: list[str]) -> None:
-    # atomic publish: a manifest is either fully present or absent
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(os.path.basename(p) for p in inputs))
-    os.replace(tmp, manifest_path)
-
-
-def recover_compaction(path: str) -> int:
-    """Finish any interrupted group publishes. Idempotent; returns the
-    number of ``*.parquet.compacted`` files published.
-
-    Recovery order per group: if the merged ``.compacted`` file exists,
-    its manifest's inputs are deleted FIRST (some may survive a crash
-    mid-deletion — renaming before deleting them would duplicate their
-    rows), then the rename finishes, then the manifest is dropped. A
-    manifest without a ``.compacted`` file is an orphan from either side
-    of the publish window and is simply removed."""
-    n = 0
-    for f in sorted(os.listdir(path)):
-        if not f.endswith(".parquet.compacted"):
-            continue
-        compacted = os.path.join(path, f)
-        dest = compacted[: -len(".compacted")]
-        manifest = compacted + ".manifest"
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                listed = [line for line in fh.read().splitlines() if line]
-            for name in listed:
-                p = os.path.join(path, name)
-                # dest (group[0]) is overwritten by the rename below, but
-                # delete it too so a crash here re-enters the same state
-                if os.path.exists(p):
-                    os.remove(p)
-        os.replace(compacted, dest)
-        if os.path.exists(manifest):
-            os.remove(manifest)
-        n += 1
-    # orphan manifests: publish never started (inputs intact) or fully
-    # finished (inputs gone) — either way the manifest is stale
-    for f in os.listdir(path):
-        if f.endswith(_MANIFEST_SUFFIX):
-            os.remove(os.path.join(path, f))
-    return n
-
-
 def compact_flush_files(
     spark: SparkSession,
     path: str,
@@ -133,10 +73,9 @@ def compact_flush_files(
 
     Returns {"groups_rewritten": int, "files_before": int, "files_after": int}.
     """
-    recover_compaction(path)
     groups = plan_compaction(path, target_bytes)
     files_before = sum(len(g) for g in groups)
-    staging = os.path.join(path, f".compact-{uuid.uuid4().hex[:8]}")
+    staging = os.path.join(path, ".staging", uuid.uuid4().hex)
     rewritten = 0
     try:
         for i, group in enumerate(groups):
@@ -152,16 +91,11 @@ def compact_flush_files(
                 .parquet(out_dir)
             )
             [part] = data_files(out_dir)
-            # publish: manifest first (names the inputs the merged file
-            # replaces), then the merged file, then drop inputs, then the
-            # final rename — recover_compaction can finish from any point
-            dest = group[0]  # keeps sort-order naming within the dir
-            _write_manifest(dest + ".compacted.manifest", group)
-            os.replace(part, dest + ".compacted")
-            for f in group:
-                os.remove(f)
-            os.replace(dest + ".compacted", dest)
-            os.remove(dest + ".compacted.manifest")
+            # "<first>-<token>.parquet" sorts just before "<first>.parquet",
+            # so the merged rows keep the group's place in file order
+            first = os.path.basename(group[0]).removesuffix(".parquet")
+            merged = f"{first}-{uuid.uuid4().hex[:8]}.parquet"
+            commit(path, {part: merged}, remove=group)
             rewritten += 1
     finally:
         shutil.rmtree(staging, ignore_errors=True)

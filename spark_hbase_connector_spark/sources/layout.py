@@ -10,29 +10,96 @@ engine — the ``hbasekv`` reader, ``stats_scan`` and minor compaction —
 reads the layout through these functions, so they always agree on the
 file set.
 
-Only ``os`` and pyarrow are used, so Python workers import this cheaply.
+A table written by the engine also carries a manifest, ``_manifest.json``
+(``{"files": [live data-file names]}``), and every writer publishes
+through ``commit``, which swaps it with one ``os.replace`` — the
+log-over-Parquet idea of Delta Lake (Armbrust et al., VLDB 2020) reduced
+to a list of file names. Readers see the old table or the new one.
+
+Only the standard library and pyarrow are used, so Python workers
+import this cheaply.
 """
 
 from __future__ import annotations
 
+import fcntl
+import json
 import os
 from typing import NamedTuple
 
 NAMINGS = ("column", "cf:col")
+MANIFEST = "_manifest.json"
+
+
+def _is_data(name: str) -> bool:
+    # Spark's own rule: metadata, staging and checksum files are never data
+    return name.endswith(".parquet") and not name.startswith(("_", "."))
+
+
+def _live(path: str, on_disk: list[str]) -> set[str]:
+    if MANIFEST not in on_disk:
+        return set(filter(_is_data, on_disk))
+    with open(os.path.join(path, MANIFEST)) as fh:
+        return set(json.load(fh)["files"]).intersection(on_disk)
+
+
+def has_manifest(path: str) -> bool:
+    return os.path.isfile(os.path.join(path, MANIFEST))
 
 
 def data_files(path: str) -> list[str]:
-    """The table's data files, sorted: Spark's own rule, ``*.parquet``
-    files whose names do not start with ``_`` or ``.`` (metadata,
-    staging and checksum files are never data). A file path is a
-    one-file table."""
+    """The table's live data files, sorted. With a manifest: the listed
+    files that still exist (a file deleted outside the protocol is
+    skipped). Without one: Spark's rule, ``*.parquet`` files whose names
+    do not start with ``_`` or ``.``. A file path is a one-file table."""
     if not os.path.isdir(path):
         return [path]
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
+    return sorted(os.path.join(path, n) for n in _live(path, os.listdir(path)))
+
+
+def _write_manifest(path: str, names) -> None:
+    tmp = os.path.join(path, MANIFEST + ".tmp")
+    with open(tmp, "w") as fh:
+        json.dump({"files": sorted(names)}, fh)
+    os.replace(tmp, os.path.join(path, MANIFEST))
+
+
+def commit(path: str, staged: dict[str, str], remove=()) -> None:
+    """Publish ``staged`` (staged file -> new data-file name) and retire
+    ``remove`` (live data files of ``path``) with one manifest swap.
+
+    - Writers are serialized by ``flock`` on the table directory.
+    - A new file is invisible until the manifest lists it: a first
+      manifest records the current listing, the staged files are renamed
+      in, the manifest is replaced (the commit point), and only then are
+      the removed files deleted. A crash at any step leaves only unlisted
+      files, which readers ignore and the next commit deletes.
+    - A stale remove (no longer live) raises before anything changes;
+      the caller deletes its staged files.
+    - Listed files deleted outside the protocol are dropped, so after a
+      commit the directory's data files are exactly the listed ones.
+    """
+    os.makedirs(path, exist_ok=True)
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        on_disk = os.listdir(path)
+        live = _live(path, on_disk)
+        gone = {os.path.basename(f) for f in remove}
+        if not gone <= live:
+            raise RuntimeError(f"stale commit to {path}: {sorted(gone - live)} no longer live")
+        if MANIFEST not in on_disk:
+            _write_manifest(path, live)
+        # data files no manifest lists were left by a commit that died
+        for n in set(filter(_is_data, on_disk)) - live:
+            os.remove(os.path.join(path, n))
+        for src, name in staged.items():
+            os.replace(src, os.path.join(path, name))
+        _write_manifest(path, (live - gone) | set(staged.values()))
+        for n in gone.difference(staged.values()):
+            os.remove(os.path.join(path, n))
+    finally:
+        os.close(fd)
 
 
 class FileBounds(NamedTuple):

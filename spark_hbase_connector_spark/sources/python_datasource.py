@@ -64,7 +64,12 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from spark_hbase_connector_spark.sources.catalog import TableCatalog, parse_catalog
-from spark_hbase_connector_spark.sources.layout import data_files, file_bounds, physical_name
+from spark_hbase_connector_spark.sources.layout import (
+    commit,
+    data_files,
+    file_bounds,
+    physical_name,
+)
 
 _SUPPORTED = (
     EqualTo,
@@ -412,24 +417,13 @@ class FlushCommitMessage(WriterCommitMessage):
     rows: int
 
 
-class HbaseKVStreamWriter(DataSourceStreamWriter):
-    """Streaming flush-file SINK — the write half of the changefeed story
-    (the reference has no write path at all; SURVEY §2.1 S11): each
-    micro-batch becomes one or more immutable, rowkey-sorted flush files,
-    published under names that sort by batch id — exactly the layout
-    :class:`HbaseKVStreamReader` consumes, so two jobs can be chained
-    through a directory like region servers through a WAL.
-
-    Exactly-once via the two-phase DS commit protocol: ``write()`` runs
-    per task and stages its rows into a hidden ``.staging/`` temp file
-    (never visible to readers), ``commit()`` runs once per successful
-    batch on the driver and atomically renames staged files to their
-    final ``{batchId}-{task}.parquet`` names, ``abort()`` deletes the
-    stage. Names are deterministic in (batchId, task index), so a
-    replayed commit overwrites the same files — idempotent. The atomic
-    rename assumes a shared filesystem (local/NFS/HDFS); on object
-    storage swap the rename for a manifest commit, keeping the same
-    message flow."""
+class _FlushFileWriter:
+    """What the stream and batch writers share: each task stages its rows
+    as one rowkey-sorted flush file in the table's hidden ``.staging/``
+    directory (never visible to readers), the driver's ``commit()``
+    publishes the staged files with one manifest swap (``layout.commit``:
+    readers see the table before or after, never a mix), and ``abort()``
+    deletes them."""
 
     def __init__(
         self,
@@ -445,60 +439,63 @@ class HbaseKVStreamWriter(DataSourceStreamWriter):
         self.staging = os.path.join(path, ".staging")
 
     def write(self, iterator) -> FlushCommitMessage:
-        return _stage_flush_file(
-            self.catalog, self.out_schema, self.physical_naming, self.staging, iterator
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rows = list(iterator)
+        if not rows:
+            return FlushCommitMessage(staged="", rows=0)
+        names, arrays = [], []
+        for f in self.out_schema.fields:
+            vals = [r[f.name] for r in rows]
+            arrays.append(pa.array(vals, type=_arrow_type(f.dataType)))
+            names.append(physical_name(self.catalog, f.name, self.physical_naming))
+        tbl = pa.table(dict(zip(names, arrays))).sort_by(
+            physical_name(self.catalog, self.catalog.rowkey, self.physical_naming)
         )
+        os.makedirs(self.staging, exist_ok=True)
+        staged = os.path.join(self.staging, uuid.uuid4().hex + ".parquet")
+        pq.write_table(tbl, staged)
+        return FlushCommitMessage(staged=staged, rows=len(rows))
 
-    def commit(self, messages, batchId: int) -> None:
-        nonempty = [m for m in messages if m is not None and m.staged]
-        for i, m in enumerate(nonempty):
-            dst = os.path.join(self.path, f"{batchId:010d}-{i:04d}.parquet")
-            os.replace(m.staged, dst)
+    def _publish(self, messages, name, remove=()) -> None:
+        """Commit the staged files, the i-th under ``name(i)``."""
+        staged = [m.staged for m in messages if m is not None and m.staged]
+        commit(self.path, {f: name(i) for i, f in enumerate(staged)}, remove)
 
-    def abort(self, messages, batchId: int) -> None:
+    def abort(self, messages, batchId: int | None = None) -> None:
         for m in messages:
             if m is not None and m.staged and os.path.exists(m.staged):
                 os.remove(m.staged)
 
 
-def _stage_flush_file(
-    catalog: TableCatalog,
-    schema: StructType,
-    physical_naming: str,
-    staging: str,
-    iterator,
-) -> FlushCommitMessage:
-    """Task-side stage: rows -> one rowkey-sorted parquet flush file in the
-    hidden staging dir; shared by the batch and streaming writers."""
-    import uuid
+class HbaseKVStreamWriter(_FlushFileWriter, DataSourceStreamWriter):
+    """Streaming flush-file SINK — the write half of the changefeed story
+    (the reference has no write path at all; SURVEY §2.1 S11): each
+    micro-batch becomes one or more immutable, rowkey-sorted flush files,
+    published under names that sort by batch id — exactly the layout
+    :class:`HbaseKVStreamReader` consumes, so two jobs can be chained
+    through a directory like region servers through a WAL.
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    Exactly-once via the two-phase DS commit protocol: tasks stage,
+    ``commit()`` runs once per successful batch on the driver and
+    publishes the staged files as ``{batchId}-{task}.parquet``,
+    ``abort()`` deletes the stage. Names are deterministic in (batchId,
+    task index), so a replayed commit republishes the same files —
+    idempotent."""
 
-    rows = list(iterator)
-    if not rows:
-        return FlushCommitMessage(staged="", rows=0)
-    names, arrays = [], []
-    for f in schema.fields:
-        vals = [r[f.name] for r in rows]
-        arrays.append(pa.array(vals, type=_arrow_type(f.dataType)))
-        names.append(physical_name(catalog, f.name, physical_naming))
-    tbl = pa.table(dict(zip(names, arrays))).sort_by(
-        physical_name(catalog, catalog.rowkey, physical_naming)
-    )
-    os.makedirs(staging, exist_ok=True)
-    staged = os.path.join(staging, uuid.uuid4().hex + ".parquet")
-    pq.write_table(tbl, staged)
-    return FlushCommitMessage(staged=staged, rows=len(rows))
+    def commit(self, messages, batchId: int) -> None:
+        self._publish(messages, lambda i: f"{batchId:010d}-{i:04d}.parquet")
 
 
-class HbaseKVBatchWriter(DataSourceWriter):
+class HbaseKVBatchWriter(_FlushFileWriter, DataSourceWriter):
     """Batch ``df.write.format("hbasekv")`` — the same staged-flush-file
-    two-phase commit as the streaming writer (tasks stage, driver
-    publishes by atomic rename), with a per-job publication prefix and
-    optional overwrite (SaveMode.Overwrite clears previously published
-    flush files inside ``commit()``, after staging succeeded — readers
-    never observe a partial state on a posix rename-atomic filesystem).
+    two-phase commit as the streaming writer, with a per-job publication
+    prefix and optional overwrite (SaveMode.Overwrite retires every live
+    file in the same manifest swap that publishes the new ones, so a
+    reader never sees an empty or mixed table).
     Published names carry a job-unique token, so successive APPEND writes
     never collide (a fixed prefix would silently clobber the previous
     append's files); within one job the names are deterministic, so a
@@ -518,35 +515,21 @@ class HbaseKVBatchWriter(DataSourceWriter):
     ) -> None:
         import uuid
 
-        self.catalog = catalog
-        self.out_schema = schema
-        self.path = path
-        self.physical_naming = physical_naming
-        self.staging = os.path.join(path, ".staging")
+        super().__init__(catalog, schema, path, physical_naming)
         self.overwrite = overwrite
         # fixed at job submission on the driver; commit() reuses it, so a
         # commit retry republishes the SAME names (idempotent) while a new
         # append job gets fresh ones (no clobber)
         self.job_token = uuid.uuid4().hex[:12]
 
-    def write(self, iterator) -> "FlushCommitMessage":
-        return _stage_flush_file(
-            self.catalog, self.out_schema, self.physical_naming, self.staging, iterator
-        )
-
     def commit(self, messages) -> None:
-        nonempty = [m for m in messages if m is not None and m.staged]
-        if self.overwrite:
-            for f in data_files(self.path):
-                os.remove(f)
-        for i, m in enumerate(nonempty):
-            dst = os.path.join(self.path, f"batch-{self.job_token}-{i:05d}.parquet")
-            os.replace(m.staged, dst)
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None and m.staged and os.path.exists(m.staged):
-                os.remove(m.staged)
+        # a table directory that does not exist yet has nothing to retire
+        overwrite = self.overwrite and os.path.isdir(self.path)
+        self._publish(
+            messages,
+            lambda i: f"batch-{self.job_token}-{i:05d}.parquet",
+            remove=data_files(self.path) if overwrite else (),
+        )
 
 
 def _arrow_type(spark_type):

@@ -20,6 +20,11 @@ Catalyst + Parquet already do natively. So the PySpark-native equivalent is
   own TODO (rowkey ranges were evaluated row-by-row server-side instead of
   narrowing scan bounds, ``HbasePartitionReader.scala:147``).
 
+Commit contract: a flat Parquet ``write_table`` stages Spark's output under
+``path/.staging/`` and publishes it with one manifest swap
+(``layout.commit``), so readers see the old table or the new one and a
+table may be rewritten in place — the whole-table compaction.
+
 Physical naming: ``write_table`` stores columns under ``cf:qualifier`` and
 the rowkey under its catalog ``col`` qualifier (one convention,
 ``layout.physical_name``, shared with the DS reader, so rowkeys whose ``col``
@@ -31,6 +36,8 @@ qualifier-named Parquet (``physical_naming="column"``) so external datasets
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +46,12 @@ from spark_hbase_connector_spark.sources.catalog import (
     TableCatalog,
     parse_catalog,
 )
-from spark_hbase_connector_spark.sources.layout import physical_name
+from spark_hbase_connector_spark.sources.layout import (
+    commit,
+    data_files,
+    has_manifest,
+    physical_name,
+)
 
 
 def _physical_schema(cat: TableCatalog, naming: str, overrides: dict | None = None):
@@ -109,10 +121,19 @@ def load_table(
         raise ValueError(f"on_malformed must be one of {sorted(modes)}")
     cat = catalog if isinstance(catalog, TableCatalog) else parse_catalog(catalog)
     # a list of paths = an explicit file subset (planner-pruned read sets,
-    # e.g. stats_scan.head_by_rowkey); columnar formats only
-    paths = path if isinstance(path, list) else [path]
+    # e.g. stats_scan.head_by_rowkey); columnar formats only. A manifest
+    # table reads the files its manifest lists.
+    if isinstance(path, list):
+        paths = path
+    else:
+        paths = data_files(path) if has_manifest(path) else [path]
     if data_format == "parquet":
-        raw = spark.read.parquet(*paths)
+        # an empty table has no file to infer a schema from
+        raw = (
+            spark.read.parquet(*paths)
+            if paths
+            else spark.createDataFrame([], _physical_schema(cat, physical_naming))
+        )
     elif data_format == "orc":
         raw = spark.read.orc(*paths)
     elif data_format == "csv":
@@ -173,33 +194,6 @@ def _adapt(expr, physical, declared):
     return expr.cast(declared)
 
 
-def compact_table(
-    spark: SparkSession,
-    catalog: str | dict | TableCatalog,
-    path: str,
-    num_partitions: int,
-    physical_naming: str = "cf:col",
-) -> None:
-    """Rewrite a table into ``num_partitions`` rowkey-sorted files — the
-    small-file compaction every long-lived ingest needs (a stream or
-    micro-batch writer leaves thousands of tiny files; scan cost and
-    row-group pruning both degrade). Reads through the catalog, rewrites
-    with the same layout discipline to a sibling temp dir, then swaps —
-    the input path is never read and written concurrently. On object
-    storage, swap via a manifest/rename of the prefix instead."""
-    import shutil
-
-    cat = catalog if isinstance(catalog, TableCatalog) else parse_catalog(catalog)
-    df = load_table(spark, cat, path, physical_naming)
-    tmp = path.rstrip("/") + ".__compact_tmp"
-    write_table(df, cat, tmp, num_partitions=num_partitions)
-    old = path.rstrip("/") + ".__compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def write_bucketed(
     df: DataFrame,
     catalog: str | dict | TableCatalog,
@@ -247,17 +241,20 @@ def write_table(
     catalog: str | dict | TableCatalog,
     path: str,
     num_partitions: int | None = None,
-    mode: str = "overwrite",
     data_format: str = "parquet",
     partition_by: str | list[str] | None = None,
 ) -> None:
-    """Write a logical DataFrame as a rowkey-sorted Parquet dataset.
+    """Write a logical DataFrame as a rowkey-sorted Parquet dataset,
+    replacing whatever ``path`` held.
 
     Layout discipline for scale: ``repartitionByRange(rowkey)`` gives
     non-overlapping rowkey ranges per file (the analogue of one HBase region
     per partition, ``HbaseScan.scala:27-45``) and ``sortWithinPartitions``
     makes Parquet row-group min/max statistics tight, so rowkey range
     predicates skip whole files/row-groups at scan time.
+
+    Flat Parquet commits through the table manifest, so ``df`` may read
+    ``path`` itself; ``partition_by`` and other formats overwrite natively.
     """
     cat = catalog if isinstance(catalog, TableCatalog) else parse_catalog(catalog)
     part_cols = (
@@ -281,10 +278,18 @@ def write_table(
     else:
         out = out.repartitionByRange(F.col(f"`{rowkey_phys}`"))
     out = out.sortWithinPartitions(f"`{rowkey_phys}`")
-    writer = out.write.mode(mode)
+    writer = out.write.mode("overwrite")
     if part_phys:
         writer = writer.partitionBy(*part_phys)
-    if data_format == "parquet":
+    if data_format == "parquet" and not part_phys:
+        staging = os.path.join(path, ".staging", uuid.uuid4().hex)
+        try:
+            writer.parquet(staging)
+            new = {f: os.path.basename(f) for f in data_files(staging)}
+            commit(path, new, remove=data_files(path))
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+    elif data_format == "parquet":
         writer.parquet(path)
     elif data_format == "orc":
         writer.orc(path)

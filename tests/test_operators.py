@@ -530,102 +530,6 @@ def test_expectations_each_rule_fires(spark):
     assert rep["foreign_key(id)"] == (1, False)
 
 
-def test_compaction_recovery_heals_interrupted_publish(spark, tmp_path):
-    """A crash between input removal and publish leaves one
-    *.parquet.compacted file; the next compaction run must heal it before
-    planning, with no rows lost."""
-    import os
-
-    from spark_hbase_connector_spark.operators.compaction import (
-        compact_flush_files,
-        recover_compaction,
-    )
-
-    d = str(tmp_path / "flush")
-    os.makedirs(d)
-    spark.range(0, 10).toDF("k").coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "one")
-    )
-    part = next(f for f in os.listdir(tmp_path / "one") if f.endswith(".parquet"))
-    # simulate the crash window: the group's merged file sits under the
-    # .compacted name and the original inputs are already gone
-    os.replace(str(tmp_path / "one" / part), os.path.join(d, "00000.parquet.compacted"))
-    assert recover_compaction(d) == 1
-    assert spark.read.parquet(d).count() == 10
-    # and compact_flush_files self-heals end-to-end
-    os.replace(os.path.join(d, "00000.parquet"), os.path.join(d, "00000.parquet.compacted"))
-    stats = compact_flush_files(spark, d, target_bytes=1 << 20)
-    assert stats["files_after"] == 1
-    assert spark.read.parquet(d).count() == 10
-
-
-def test_compaction_recovery_no_duplicates_pre_removal_crash(spark, tmp_path):
-    """Crash in the window where the merged .compacted file exists but the
-    group's inputs were NOT yet (or only partially) removed: recovery must
-    delete the manifest-listed inputs before publishing, never duplicating
-    their rows."""
-    import os
-
-    from spark_hbase_connector_spark.operators.compaction import (
-        compact_flush_files,
-        recover_compaction,
-    )
-
-    d = str(tmp_path / "flush")
-    os.makedirs(d)
-    # two input files (rows 0-4 and 5-9) plus their merged replacement
-    for lo, hi, name in [(0, 5, "00000.parquet"), (5, 10, "00001.parquet")]:
-        tmp = tmp_path / f"w{lo}"
-        spark.range(lo, hi).toDF("k").coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(str(tmp / part), os.path.join(d, name))
-    merged = tmp_path / "merged"
-    spark.range(0, 10).toDF("k").coalesce(1).write.mode("overwrite").parquet(str(merged))
-    part = next(f for f in os.listdir(merged) if f.endswith(".parquet"))
-    # simulate crash right after the merged file landed, before any input
-    # was removed: manifest + .compacted + BOTH inputs all present
-    with open(os.path.join(d, "00000.parquet.compacted.manifest"), "w") as fh:
-        fh.write("00000.parquet\n00001.parquet")
-    os.replace(str(merged / part), os.path.join(d, "00000.parquet.compacted"))
-    assert recover_compaction(d) == 1
-    assert sorted(r.k for r in spark.read.parquet(d).collect()) == list(range(10))
-    assert not any(f.endswith(".manifest") for f in os.listdir(d))
-
-    # partial-removal variant via compact_flush_files' auto-heal: only
-    # input[1] survived the crash
-    spark.range(0, 10).toDF("k").coalesce(1).write.mode("overwrite").parquet(str(merged))
-    part = next(f for f in os.listdir(merged) if f.endswith(".parquet"))
-    os.replace(
-        os.path.join(d, "00000.parquet"), os.path.join(d, "00001.parquet")
-    )  # stand-in surviving input holding duplicate rows 0..9
-    with open(os.path.join(d, "00000.parquet.compacted.manifest"), "w") as fh:
-        fh.write("00000.parquet\n00001.parquet")
-    os.replace(str(merged / part), os.path.join(d, "00000.parquet.compacted"))
-    stats = compact_flush_files(spark, d, target_bytes=1 << 20)
-    assert stats["files_after"] == 1
-    assert sorted(r.k for r in spark.read.parquet(d).collect()) == list(range(10))
-
-
-def test_compaction_orphan_manifest_is_harmless(spark, tmp_path):
-    """A manifest with no .compacted file (crash before the merged file
-    landed, or after the publish rename) must NOT delete inputs."""
-    import os
-
-    from spark_hbase_connector_spark.operators.compaction import recover_compaction
-
-    d = str(tmp_path / "flush")
-    os.makedirs(d)
-    tmp = tmp_path / "w"
-    spark.range(0, 7).toDF("k").coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.replace(str(tmp / part), os.path.join(d, "00000.parquet"))
-    with open(os.path.join(d, "00000.parquet.compacted.manifest"), "w") as fh:
-        fh.write("00000.parquet")
-    assert recover_compaction(d) == 0
-    assert spark.read.parquet(d).count() == 7
-    assert not any(f.endswith(".manifest") for f in os.listdir(d))
-
-
 def test_pca_recovers_planted_axes(spark):
     """Synthetic data with variance 100 along axis0, 25 along axis1, ~0
     elsewhere: PCA must put >0.99 of the variance in the first two

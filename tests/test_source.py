@@ -251,10 +251,9 @@ def test_write_table_hive_partitioned_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan and "dt" in plan.split("PartitionFilters", 1)[1][:200], plan
 
 
-def test_compact_table_reduces_files_and_preserves_rows(spark, tmp_path):
+def test_in_place_rewrite_reduces_files_and_preserves_rows(spark, tmp_path):
+    """Whole-table compaction is write_table over a read of the same path."""
     import glob
-
-    from spark_hbase_connector_spark.sources.table import compact_table
 
     cat = parse_catalog(
         {
@@ -271,7 +270,8 @@ def test_compact_table_reduces_files_and_preserves_rows(spark, tmp_path):
     write_table(src, cat, out, num_partitions=16)  # many small files
     before = len(glob.glob(f"{out}/*.parquet"))
     assert before == 16
-    compact_table(spark, cat, out, num_partitions=2)
+    df = load_table(spark, cat, out, physical_naming="cf:col")
+    write_table(df, cat, out, num_partitions=2)
     after = len(glob.glob(f"{out}/*.parquet"))
     assert after == 2
     back = load_table(spark, cat, out, physical_naming="cf:col")

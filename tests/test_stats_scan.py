@@ -214,9 +214,11 @@ def test_head_by_rowkey_plans_without_spark_jobs(spark, dataset):
 
 
 def test_every_planner_lists_the_same_files(spark, dataset, tmp_path):
-    """A table directory also holding non-data files: every reader of the
-    layout agrees with Spark's own listing (``_``/``.``-prefixed files
-    are not data)."""
+    """Every reader of the layout agrees on a table's live files when the
+    directory also holds files that are not live: a ``_``-prefixed file
+    (not data by Spark's rule), a data file renamed in but never committed
+    (not in the manifest), and a listed file deleted outside the commit
+    protocol (skipped)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -225,27 +227,39 @@ def test_every_planner_lists_the_same_files(spark, dataset, tmp_path):
         register_hbasekv,
     )
 
+    register_hbasekv(spark)
+
+    def assert_planners_agree(p, n_files, n_rows):
+        assert load_table(spark, CATALOG, p, physical_naming="cf:col").count() == n_rows
+        kv = (
+            spark.read.format("hbasekv")
+            .option("catalog", json.dumps(CATALOG))
+            .option("path", p)
+            .option("physical_naming", "cf:col")
+            .load()
+        )
+        assert kv.count() == n_rows
+        assert footer_stats_agg(spark, p, CATALOG).first().n_total == n_rows
+        plan = head_by_rowkey(spark, p, CATALOG, n=N_ROWS + 5)
+        assert plan.files_total == n_files
+        assert plan.df.count() == n_rows
+        assert sum(len(g) for g in plan_compaction(p)) == n_files
+
     p = str(tmp_path / "stray")
     shutil.copytree(dataset, p)
     pq.write_table(
         pa.table({"k": [N_ROWS + 1, N_ROWS + 2], "d:v": [0.0, 0.0], "d:s": ["x", "y"]}),
         os.path.join(p, "_stray.parquet"),
     )
-    assert load_table(spark, CATALOG, p, physical_naming="cf:col").count() == N_ROWS
-    register_hbasekv(spark)
-    kv = (
-        spark.read.format("hbasekv")
-        .option("catalog", json.dumps(CATALOG))
-        .option("path", p)
-        .option("physical_naming", "cf:col")
-        .load()
-    )
-    assert kv.count() == N_ROWS
-    assert footer_stats_agg(spark, p, CATALOG).first().n_total == N_ROWS
-    plan = head_by_rowkey(spark, p, CATALOG, n=N_ROWS + 5)
-    assert plan.files_total == N_FILES
-    assert plan.df.count() == N_ROWS
-    assert sum(len(g) for g in plan_compaction(p)) == N_FILES
+    assert_planners_agree(p, N_FILES, N_ROWS)
+
+    first, second = data_files(p)[:2]
+    shutil.copy(first, os.path.join(p, "uncommitted.parquet"))
+    assert_planners_agree(p, N_FILES, N_ROWS)
+
+    os.remove(second)
+    lost = pq.ParquetFile(os.path.join(dataset, os.path.basename(second))).metadata.num_rows
+    assert_planners_agree(p, N_FILES - 1, N_ROWS - lost)
 
 
 def test_head_by_rowkey_prunes_and_matches(spark, dataset):
