@@ -530,6 +530,122 @@ def test_expectations_each_rule_fires(spark):
     assert rep["foreign_key(id)"] == (1, False)
 
 
+def _staged_flush_file(spark, tmp_path, lo, hi):
+    """One rowkey-sorted flush file of keys [lo, hi), staged outside the
+    table directory, as a writer would stage it before its commit."""
+    from spark_hbase_connector_spark.sources.layout import data_files
+
+    out = str(tmp_path / f"w{lo}_{hi}")
+    spark.range(lo, hi).toDF("k").coalesce(1).write.mode("overwrite").parquet(out)
+    [part] = data_files(out)
+    return part
+
+
+def _flush_table(spark, tmp_path):
+    """A committed flush-file table: 00000.parquet = keys 0-4,
+    00001.parquet = keys 5-9."""
+    from spark_hbase_connector_spark.sources.layout import commit
+
+    d = str(tmp_path / "flush")
+    commit(
+        d,
+        {
+            _staged_flush_file(spark, tmp_path, 0, 5): "00000.parquet",
+            _staged_flush_file(spark, tmp_path, 5, 10): "00001.parquet",
+        },
+    )
+    return d
+
+
+def _live_keys(spark, d):
+    from spark_hbase_connector_spark.sources.layout import data_files
+
+    return sorted(r.k for r in spark.read.parquet(*data_files(d)).collect())
+
+
+def _parquet_on_disk(d):
+    import os
+
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def test_compaction_recovery_heals_interrupted_publish(spark, tmp_path, monkeypatch):
+    """A crash after the group's merged file landed in the directory but
+    before the manifest swap published it: readers still see only the
+    inputs, and the next compaction run deletes the unlisted merged file
+    and compacts again, with no rows lost or duplicated."""
+    import os
+
+    import pytest
+
+    from spark_hbase_connector_spark.operators.compaction import compact_flush_files
+    from spark_hbase_connector_spark.sources.layout import MANIFEST, data_files
+
+    d = _flush_table(spark, tmp_path)
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if dst == os.path.join(d, MANIFEST):
+            raise OSError("injected crash before the manifest swap")
+        return real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", replace)
+        with pytest.raises(OSError, match="injected"):
+            compact_flush_files(spark, d, target_bytes=1 << 20)
+    # the merged file is on disk but unlisted
+    assert len(_parquet_on_disk(d)) == 3 and len(data_files(d)) == 2
+    assert _live_keys(spark, d) == list(range(10))
+
+    stats = compact_flush_files(spark, d, target_bytes=1 << 20)
+    assert stats["files_after"] == 1
+    assert _live_keys(spark, d) == list(range(10))
+    assert _parquet_on_disk(d) == data_files(d)
+
+
+def test_compaction_recovery_no_duplicates_pre_removal_crash(spark, tmp_path, monkeypatch):
+    """A crash after the manifest swap published the merged file but
+    before the group's inputs were all deleted (none, or only one of the
+    two): readers see the merged file only, never the inputs' rows twice,
+    and the next commit deletes the surviving inputs."""
+    import os
+
+    import pytest
+
+    from spark_hbase_connector_spark.operators.compaction import compact_flush_files
+    from spark_hbase_connector_spark.sources.layout import commit, data_files
+
+    for survivors in (2, 1):
+        case = tmp_path / f"survivors{survivors}"
+        case.mkdir()
+        d = _flush_table(spark, case)
+        real_remove = os.remove
+        removed = []
+
+        def remove(p, d=d, survivors=survivors):
+            if os.path.dirname(p) == d:
+                if len(removed) == 2 - survivors:
+                    raise OSError("injected crash while deleting inputs")
+                removed.append(p)
+            return real_remove(p)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "remove", remove)
+            with pytest.raises(OSError, match="injected"):
+                compact_flush_files(spark, d, target_bytes=1 << 20)
+        assert len(data_files(d)) == 1
+        assert len(_parquet_on_disk(d)) == 1 + survivors
+        assert _live_keys(spark, d) == list(range(10))
+
+        # the next commit (a flush of keys 10-14) deletes the survivors
+        commit(d, {_staged_flush_file(spark, case, 10, 15): "00002.parquet"})
+        assert _parquet_on_disk(d) == data_files(d)
+        assert _live_keys(spark, d) == list(range(15))
+        stats = compact_flush_files(spark, d, target_bytes=1 << 20)
+        assert stats["files_after"] == 1
+        assert _live_keys(spark, d) == list(range(15))
+
+
 def test_pca_recovers_planted_axes(spark):
     """Synthetic data with variance 100 along axis0, 25 along axis1, ~0
     elsewhere: PCA must put >0.99 of the variance in the first two
