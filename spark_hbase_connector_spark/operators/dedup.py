@@ -3,10 +3,11 @@
 Four strategies, all pure-DataFrame (no collect, no driver-side state):
 
 - ``dedup_exact``: hash-groupBy on a key expression; one shuffle.
-- ``shingle_jaccard_pairs``: *exact* near-dup pairs via an inverted-index
-  self-join on word shingles — never a cross join. At 100 TB add a
-  document-frequency cap on shingles (hot shingles contribute pairs
-  quadratically); exposed as ``max_df``.
+- ``shingle_jaccard_pairs`` / ``shingle_containment_pairs``: *exact*
+  near-dup pairs over word shingles via a rarest-first prefix-filter
+  self-join (PPJoin family) plus exact verification — never a cross join,
+  and hot (boilerplate) shingles never enter a prefix, so candidate volume
+  stays bounded without dropping any shingle from the measure.
 - ``minhash_lsh_pairs``: MinHash signatures + banded LSH candidate
   generation + exact-Jaccard verification. The scale path: candidate volume
   is tunable via (num_hashes, bands) and verification touches only
@@ -100,39 +101,6 @@ def shingle_postings(
     return src.mapInPandas(gen, schema=f"id {id_type}, s string")
 
 
-def shingle_postings_pos(
-    df: DataFrame, text_col: str, id_col: str, w: int = 8
-) -> DataFrame:
-    """(id, p, s): EVERY w-shingle occurrence with its 0-based token
-    position — NOT distinct, unlike :func:`shingle_postings`, because span
-    detection needs each position. Same Arrow single-pass architecture."""
-    import pandas as pd
-
-    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            ps: list[int] = []
-            shs: list[str] = []
-            for i, t in zip(pdf["id"], pdf["__text"]):
-                if t is None:
-                    continue
-                toks = t.split(" ")
-                if len(toks) < w:
-                    continue
-                for p in range(len(toks) - w + 1):
-                    ids.append(i)
-                    ps.append(p)
-                    shs.append(" ".join(toks[p : p + w]))
-            yield pd.DataFrame(
-                {"id": ids, "p": pd.array(ps, dtype="int32"), "s": shs}
-            )
-
-    return src.mapInPandas(gen, schema=f"id {id_type}, p int, s string")
-
-
 # splitmix64 finalizer constants for the vectorized shingle hasher
 _MX1 = 0x9E3779B97F4A7C15
 _MX2 = 0xBF58476D1CE4E5B9
@@ -196,6 +164,22 @@ def _batch_shingle_hashes(pdf, w: int):
     return ids, d, pos, h[valid]
 
 
+def _distinct_doc_hashes(d, h):
+    """The distinct (doc, hash) pairs of :func:`_batch_shingle_hashes`
+    output, sorted by doc then hash: a C-level lexsort plus
+    consecutive-dedup."""
+    import numpy as np
+
+    if not len(d):
+        return d, h
+    order = np.lexsort((h, d))
+    d, h = d[order], h[order]
+    keep = np.empty(len(d), dtype=bool)
+    keep[0] = True
+    keep[1:] = (d[1:] != d[:-1]) | (h[1:] != h[:-1])
+    return d[keep], h[keep]
+
+
 def shingle_posting_hashes(
     df: DataFrame, text_col: str, id_col: str, w: int = 3
 ) -> DataFrame:
@@ -218,14 +202,7 @@ def shingle_posting_hashes(
     def gen(batches):
         for pdf in batches:
             ids, d, _, h = _batch_shingle_hashes(pdf, w)
-            if len(d):
-                # distinct (doc, hash): lexsort + consecutive-dedup
-                order = np.lexsort((h, d))
-                d, h = d[order], h[order]
-                keep = np.empty(len(d), dtype=bool)
-                keep[0] = True
-                keep[1:] = (d[1:] != d[:-1]) | (h[1:] != h[:-1])
-                d, h = d[keep], h[keep]
+            d, h = _distinct_doc_hashes(d, h)
             yield pd.DataFrame({"id": ids[d], "s": h.view(np.int64)})
 
     return src.mapInPandas(gen, schema=f"id {id_type}, s long")
@@ -235,9 +212,10 @@ def shingle_posting_hashes_pos(
     df: DataFrame, text_col: str, id_col: str, w: int = 8
 ) -> DataFrame:
     """(id, p, h): EVERY w-shingle occurrence as (0-based token position,
-    64-bit shingle hash) — the hashed twin of :func:`shingle_postings_pos`
-    (span detection consumes only position + identity, never the string).
-    Same vectorized single-pass core as :func:`shingle_posting_hashes`."""
+    64-bit shingle hash) — NOT distinct, unlike
+    :func:`shingle_posting_hashes`, because span detection needs each
+    position (and only position + identity, never the string). Same
+    vectorized single-pass core as :func:`shingle_posting_hashes`."""
     import numpy as np
     import pandas as pd
 
@@ -369,26 +347,6 @@ def duplicated_span_stats(
     )
 
 
-def _hashed_postings_and_sizes(
-    df: DataFrame, text_col: str, id_col: str, w: int, max_df: int | None
-):
-    """Shared inverted-index scaffolding for the exact pair operators:
-    persisted 64-bit-hash-keyed postings (the join/groupBy key is an
-    8-byte long computed INSIDE the Arrow pass — r10: the shingle string
-    no longer crosses the Python->JVM boundary either, see
-    :func:`shingle_posting_hashes`), per-doc set sizes computed BEFORE
-    the ``max_df`` stop-shingle filter (so similarity denominators stay
-    the naive definition), then the optional hot-shingle drop."""
-    posts = shingle_posting_hashes(df, text_col, id_col, w).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sizes = posts.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    if max_df is not None:
-        hot = posts.groupBy("s").count().where(F.col("count") > max_df).select("s")
-        posts = posts.join(F.broadcast(hot), "s", "left_anti")
-    return posts, sizes
-
-
 def _rarity_ranked_docs(posts: DataFrame) -> DataFrame:
     """(id, ss, n): each document's shingle hashes as an array sorted by
     global rarity (document frequency asc, hash asc — one shared total
@@ -433,47 +391,18 @@ def shingle_containment_pairs(
     id_col: str,
     threshold: float = 0.9,
     w: int = 3,
-    max_df: int | None = None,
 ) -> DataFrame:
-    """Asymmetric containment pairs: C(A in B) = |A ∩ B| / |A| >= threshold
-    over distinct word w-shingles — catches a short document embedded in a
-    longer one, which symmetric Jaccard misses (the union term dilutes it).
+    """Exact asymmetric containment pairs: C(A in B) = |A ∩ B| / |A| >=
+    threshold over distinct word w-shingles — catches a short document
+    embedded in a longer one, which symmetric Jaccard misses (the union
+    term dilutes it). Candidates come from a rarest-first PREFIX-FILTER
+    index, which is lossless, unlike an LSH candidate stage:
+    Jaccard-banding misses exactly the low-Jaccard short-in-long pairs
+    containment exists to catch.
 
-    Same inverted-index architecture as :func:`shingle_jaccard_pairs`
-    (persisted hashed postings, candidate pairs only), but the self-join
-    keeps BOTH directions (id1 != id2): containment is directional, and
-    each direction divides by its own contained-side set size.
-
-    Output: (id1, id2, containment) = id1's shingles covered by id2.
-    """
-    posts, sizes = _hashed_postings_and_sizes(df, text_col, id_col, w, max_df)
-    a, b = posts.alias("a"), posts.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") != F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("id").alias("id1"), F.col("n").alias("n1"))
-    cont = F.col("i") / F.col("n1")
-    return (
-        inter.join(sa, "id1")
-        .where(cont >= threshold)
-        .select("id1", "id2", F.round(cont, 4).alias("containment"))
-    )
-
-
-def shingle_containment_pairs_prefix(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.9,
-    w: int = 3,
-) -> DataFrame:
-    """Containment pairs via a rarest-first PREFIX-FILTER index — the
-    scale path for :func:`shingle_containment_pairs`, with IDENTICAL
-    output (lossless, unlike an LSH candidate stage: Jaccard-banding
-    misses exactly the low-Jaccard short-in-long pairs containment
-    exists to catch).
+    Output: (id1, id2, containment) = id1's shingles covered by id2,
+    rounded to 4 places; both directions of a pair are reported when each
+    qualifies.
 
     Completeness (pigeonhole): order every document's shingles by global
     rarity (document frequency asc, hash asc). If C(A in B) = |A∩B|/|A|
@@ -482,7 +411,10 @@ def shingle_containment_pairs_prefix(
     Hence joining only A's prefix against full postings generates every
     qualifying directional pair. (+1 extra prefix element absorbs any
     float-rounding of (1-t)*n — a longer prefix only adds candidates,
-    never drops pairs.)
+    never drops pairs. The prefix length k is capped at |A|: the count
+    filter below must use the prefix's real length, or at low t, and for
+    one-shingle documents at any t, it asks for more matches than the
+    prefix holds and drops qualifying pairs.)
 
     Two further SOUND prunes keep the verify stage tiny:
     - count filter: |A∩B| >= t|A| and at most |A|-k matches can fall
@@ -501,9 +433,16 @@ def shingle_containment_pairs_prefix(
     ~(1-t) of each doc's shingles AND biased to the rarest shingles, so
     hot boilerplate shingles never generate candidates from the prefix
     side. Measured at the 50k 10x-replication stress: ~28 s vs >600 s
-    for the exact join, identical 492,910 pairs (SCALE.md).
+    for a plain inverted-index self-join, identical 492,910 pairs
+    (SCALE.md). At low thresholds the prefix covers most of each
+    document (floor(0.9n)+2 of n shingles at t=0.1), so the candidate
+    join does that plain join's work plus the ranking and verification.
     """
-    posts, _ = _hashed_postings_and_sizes(df, text_col, id_col, w, None)
+    # persisted: the ranking's df count and join both read the postings,
+    # and Spark would re-run the Python shingler for each consumer
+    posts = shingle_posting_hashes(df, text_col, id_col, w).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # one groupBy(id) produces rank (sort_array), size, prefix slice and
     # the verification array — same fusion as the jaccard twin (r6);
     # r11: shared _rarity_ranked_docs scaffolding (shuffled-hash df join,
@@ -514,7 +453,10 @@ def shingle_containment_pairs_prefix(
     docs = (
         _rarity_ranked_docs(posts)
         .withColumn(
-            "k", (F.floor((1.0 - threshold) * F.col("n")) + 2).cast("int")
+            "k",
+            F.least(
+                F.col("n"), F.floor((1.0 - threshold) * F.col("n")) + 2
+            ).cast("int"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -560,58 +502,14 @@ def shingle_jaccard_pairs(
     id_col: str,
     threshold: float = 0.85,
     w: int = 3,
-    max_df: int | None = None,
 ) -> DataFrame:
-    """Exact Jaccard >= threshold pairs over distinct word w-shingles.
-
-    Inverted-index join on the postings: count common shingles per pair,
-    then Jaccard from the pair intersection and per-doc set sizes.
-    ``max_df`` drops shingles occurring in more than that many docs
-    (stop-shingles) — essential at scale, off by default so the result is
-    exactly the naive definition.
-
-    Output columns: (id1, id2, jaccard).
-    """
-    # The postings subtree is an Arrow mapInPandas stage consumed by three
-    # relations (sizes + both sides of the self-join); without a persist
-    # Spark re-executes the Python shingler per consumer.
-    # The join/groupBy key is xxhash64(shingle), not the shingle string:
-    # the self-join exchanges move 8-byte longs instead of ~N-word text
-    # (measured 25-40% faster at sf0.1, identical pairs). Distinctness per
-    # doc is preserved under the hash; a 64-bit collision would need two
-    # different shingles in the SAME candidate pair's union — expected
-    # collision pairs ≈ |shingles|²/2⁶⁵, negligible even at corpus scale.
-    posts, sizes = _hashed_postings_and_sizes(df, text_col, id_col, w, max_df)
-    a, b = posts.alias("a"), posts.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("id").alias("id1"), F.col("n").alias("n1"))
-    sb = sizes.select(F.col("id").alias("id2"), F.col("n").alias("n2"))
-    jac = F.col("i") / (F.col("n1") + F.col("n2") - F.col("i"))
-    return (
-        inter.join(sa, "id1")
-        .join(sb, "id2")
-        .select("id1", "id2", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def shingle_jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.85,
-    w: int = 3,
-) -> DataFrame:
-    """Exact Jaccard pairs via a rarest-first PREFIX-FILTER self-join
-    (PPJoin family) — the LOSSLESS scale path for
-    :func:`shingle_jaccard_pairs`, with identical output. MinHash-LSH
+    """Exact Jaccard >= threshold pairs over distinct word w-shingles, via
+    a rarest-first PREFIX-FILTER self-join (PPJoin family, Xiao et al.,
+    WWW 2008) plus exact verification. MinHash-LSH
     (:func:`minhash_lsh_pairs`) stays the probabilistic alternative; this
-    one is a theorem, not an s-curve, so it can replace the exact
-    baseline wherever exactness is the contract.
+    one is a theorem, not an s-curve, so exactness is the contract.
+
+    Output columns: (id1, id2, jaccard), id1 < id2, jaccard unrounded.
 
     Completeness: order every document's shingles by global rarity
     (document frequency asc, hash asc — one shared total order). If
@@ -626,10 +524,10 @@ def shingle_jaccard_pairs_prefix(
     prefixes add candidates, never drop pairs.)
 
     Plan shape (flattened r6, VERDICT r5 item 5): candidate volume falls
-    from Σ_s df(s)² (every shared shingle — the exact join's wall) to
-    Σ_s pf(s)² over PREFIX postings only (~(1-t) of each doc's shingles,
-    biased to the rarest, so hot boilerplate shingles never reach the
-    join). The per-doc set size ``n`` RIDES ON the prefix postings (one
+    from Σ_s df(s)² (every shared shingle — a plain inverted-index
+    self-join's wall) to Σ_s pf(s)² over PREFIX postings only (~(1-t)
+    of each doc's shingles, biased to the rarest, so hot boilerplate
+    shingles never reach the join). The per-doc set size ``n`` RIDES ON the prefix postings (one
     extra long per row), so the size-ratio filter
     (min(n1,n2) >= t·max(n1,n2)) fuses into the candidate aggregation
     itself — no separate s1/s2 size joins, and survivors go straight to
@@ -639,7 +537,11 @@ def shingle_jaccard_pairs_prefix(
     without the persist Spark plans the chain twice. Every shuffle is
     prefix-postings- or candidate-sized.
     """
-    posts, _ = _hashed_postings_and_sizes(df, text_col, id_col, w, None)
+    # persisted: the ranking's df count and join both read the postings,
+    # and Spark would re-run the Python shingler for each consumer
+    posts = shingle_posting_hashes(df, text_col, id_col, w).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # df via groupBy+join, NOT a count-over-window by s: a boilerplate
     # shingle's window group would buffer df(s) rows in ONE task
     # (unsplittable skew), while the aggregate is map-side partial and AQE
@@ -764,12 +666,8 @@ def minhash_band_buckets(
                 )
                 continue
             # distinct (doc, shingle) then mask to the 32-bit affine domain
-            order = np.lexsort((h, d))
-            d, h = d[order], h[order]
-            keep = np.empty(len(d), dtype=bool)
-            keep[0] = True
-            keep[1:] = (d[1:] != d[:-1]) | (h[1:] != h[:-1])
-            d, x = d[keep], h[keep] & np.uint64(0xFFFFFFFF)
+            d, h = _distinct_doc_hashes(d, h)
+            x = h & np.uint64(0xFFFFFFFF)
             docs, starts = np.unique(d, return_index=True)
             n_docs = len(docs)
             sig = np.empty((num_hashes, n_docs), dtype=np.uint64)
@@ -812,7 +710,7 @@ def minhash_lsh_pairs(
     postings. With (64, 16) the LSH s-curve threshold is (1/16)^(1/4) =
     0.5: a 0.9-similar pair is missed with p < 1e-7, and everything
     reported is exact-verified, so at these parameters the output equals
-    the exact ``shingle_jaccard_pairs`` result with near-certainty while
+    the exact :func:`shingle_jaccard_pairs` result with near-certainty while
     only ever comparing candidate pairs.
 
     Output columns: (id1, id2, jaccard).

@@ -34,10 +34,7 @@ from spark_hbase_connector_spark.functions.urls import (
     normalize_url,
     url_domain,
 )
-from spark_hbase_connector_spark.operators.dedup import (
-    shingle_jaccard_pairs,
-    shingle_jaccard_pairs_prefix,
-)
+from spark_hbase_connector_spark.operators.dedup import shingle_jaccard_pairs
 from spark_hbase_connector_spark.operators.graph import connected_components
 from spark_hbase_connector_spark.operators.similarity import cosine_pairs_lsh
 from spark_hbase_connector_spark.queries.northstar import (
@@ -847,10 +844,10 @@ def dedup_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair relation answers "how many near-dups would each threshold
     remove", instead of re-running the dedup per candidate threshold.
     This is the knob-setting tool for `dedup_ngram_jaccard`'s threshold
-    and the LSH banding parameters; same inverted-index candidate
-    generation, so cost is the pair join it would run anyway."""
-    from spark_hbase_connector_spark.operators.dedup import shingle_jaccard_pairs
-
+    and the LSH banding parameters. The pairs come from the one exact
+    Jaccard join; at t=0.1 its prefixes hold about 90% of each document's
+    shingles, so the prefix filter prunes little and the join costs about
+    a plain inverted-index self-join plus the ranking and verification."""
     d = load(spark, sf_dir, "documents")
     pairs = shingle_jaccard_pairs(d, "text", "doc_id", threshold=0.1)
     bucket = F.round(F.floor(F.col("jaccard") * 10) / 10.0, 1)
@@ -1115,14 +1112,13 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     only adds clusters, and re-splitting never migrates an existing
     cluster. Cost on top of the CC pass the pipeline already runs for
     dedup: one node-sized left join + a hash projection — no new shuffle
-    family at 100 TB. The pair source is the prefix-filter scale path
-    (``shingle_jaccard_pairs_prefix`` — output-identical to the naive
-    inverted-index join, candidate volume Σpf(s)² not Σdf(s)²; VERDICT r6
-    item 4), so the operator's 100 TB claim holds end-to-end. The oracle
+    family at 100 TB. The pair source is the exact prefix-filter join
+    (``shingle_jaccard_pairs``, candidate volume Σpf(s)² not Σdf(s)²), so
+    the operator's 100 TB claim holds end-to-end. The oracle
     replays the exact pair graph + bounded min-label CC, then the
     identical bucket rule."""
     d = load(spark, sf_dir, "documents")
-    pairs = shingle_jaccard_pairs_prefix(d, "text", "doc_id", threshold=0.85)
+    pairs = shingle_jaccard_pairs(d, "text", "doc_id", threshold=0.85)
     comp = connected_components(pairs)
     asg = (
         d.select("doc_id")

@@ -18,7 +18,6 @@ from spark_hbase_connector_spark.operators.dedup import (
     minhash_lsh_pairs,
     shingle_containment_pairs,
     shingle_jaccard_pairs,
-    shingle_jaccard_pairs_prefix,
     simhash_pairs,
 )
 from spark_hbase_connector_spark.operators.graph import connected_components
@@ -111,6 +110,21 @@ _DUCK_JACCARD_PAIRS = f"""
     WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.85
 """
 
+# The full exact directional containment relation at t=0.9.
+_DUCK_CONTAINMENT = f"""
+    WITH {_DUCK_SHINGLES},
+    post AS (SELECT doc_id, unnest(shs) AS s FROM sh),
+    sizes AS (SELECT doc_id, len(shs) AS n FROM sh),
+    inter AS (
+      SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS i
+      FROM post a JOIN post b ON a.s = b.s AND a.doc_id <> b.doc_id
+      GROUP BY 1, 2
+    )
+    SELECT id1, id2, round(i * 1.0 / sa.n, 4) AS containment
+    FROM inter JOIN sizes sa ON id1 = sa.doc_id
+    WHERE i * 1.0 / sa.n >= 0.9
+"""
+
 
 @query(
     "dedup_exact",
@@ -155,22 +169,10 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pairs: word-3-gram Jaccard >= 0.85 (never a cross
-    join). r10: executes via the rarest-first prefix-filter self-join
-    (PPJoin — `operators/dedup.py:shingle_jaccard_pairs_prefix`), which
-    is LOSSLESS by the prefix lemma: identical pairs and values to the
-    naive inverted-index self-join, same oracle, but candidate volume
-    Σ pf(s)² instead of Σ df(s)² (the exact join's wall on
-    boilerplate-heavy corpora — ~2x at sf0.1, unboundedly more at
-    100 TB). `shingle_jaccard_pairs` remains the reference formulation
-    (`dedup_threshold_histogram` consumes it at low thresholds where
-    prefix filtering degenerates)."""
-    from spark_hbase_connector_spark.operators.dedup import (
-        shingle_jaccard_pairs_prefix,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    pairs = shingle_jaccard_pairs_prefix(d, "text", "doc_id", threshold=0.85)
-    return pairs.select("id1", "id2", F.round("jaccard", 4).alias("jaccard"))
+    join). Kept for the `__spark_entry__` contract, which lists every
+    registry entry; it runs the same code as `dedup_ngram_jaccard_prefix`
+    (`operators/dedup.py:shingle_jaccard_pairs`)."""
+    return dedup_ngram_jaccard_prefix(spark, sf_dir)
 
 
 @query(
@@ -180,71 +182,42 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LOSSLESS scale path for exact Jaccard dedup: rarest-first
-    prefix-filter self-join (PPJoin family) + size-ratio filter +
-    `array_intersect` verification — identical output to
-    `dedup_ngram_jaccard` (same oracle, the FULL exact relation), with
-    candidate volume Σ prefix-frequency² instead of Σ document-
+    """Exact Jaccard dedup: rarest-first prefix-filter self-join (PPJoin
+    family) + size-ratio and positional filters + `array_intersect`
+    verification. Lossless, so the oracle is the FULL exact relation;
+    candidate volume is Σ prefix-frequency² instead of Σ document-
     frequency², which is what survives boilerplate-heavy corpora at
     100 TB. MinHash-LSH remains the probabilistic alternative when even
     exact verification is too expensive
-    (`operators/dedup.py:shingle_jaccard_pairs_prefix`)."""
-    from spark_hbase_connector_spark.operators.dedup import (
-        shingle_jaccard_pairs_prefix,
-    )
-
+    (`operators/dedup.py:shingle_jaccard_pairs`)."""
     d = load(spark, sf_dir, "documents")
-    pairs = shingle_jaccard_pairs_prefix(d, "text", "doc_id", threshold=0.85)
+    pairs = shingle_jaccard_pairs(d, "text", "doc_id", threshold=0.85)
     return pairs.select("id1", "id2", F.round("jaccard", 4).alias("jaccard"))
 
 
 @query(
     "dedup_containment",
-    oracle=f"""
-    WITH {_DUCK_SHINGLES},
-    post AS (SELECT doc_id, unnest(shs) AS s FROM sh),
-    sizes AS (SELECT doc_id, len(shs) AS n FROM sh),
-    inter AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS i
-      FROM post a JOIN post b ON a.s = b.s AND a.doc_id <> b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT id1, id2, round(i * 1.0 / sa.n, 4) AS containment
-    FROM inter JOIN sizes sa ON id1 = sa.doc_id
-    WHERE i * 1.0 / sa.n >= 0.9
-    """,
+    oracle=_DUCK_CONTAINMENT,
     tags=("dedup", "containment"),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional containment pairs: >= 90% of id1's word-3-gram shingles
     appear in id2 — the doc-embedded-in-doc case symmetric Jaccard
-    dilutes away. Same inverted-index plan as `dedup_ngram_jaccard`; both
-    join directions are kept because containment is asymmetric."""
-    d = load(spark, sf_dir, "documents")
-    return shingle_containment_pairs(d, "text", "doc_id", threshold=0.9)
+    dilutes away. Kept for the `__spark_entry__` contract, which lists
+    every registry entry; it runs the same code as
+    `dedup_containment_prefix`."""
+    return dedup_containment_prefix(spark, sf_dir)
 
 
 @query(
     "dedup_containment_prefix",
-    oracle=f"""
-    WITH {_DUCK_SHINGLES},
-    post AS (SELECT doc_id, unnest(shs) AS s FROM sh),
-    sizes AS (SELECT doc_id, len(shs) AS n FROM sh),
-    inter AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS i
-      FROM post a JOIN post b ON a.s = b.s AND a.doc_id <> b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT id1, id2, round(i * 1.0 / sa.n, 4) AS containment
-    FROM inter JOIN sizes sa ON id1 = sa.doc_id
-    WHERE i * 1.0 / sa.n >= 0.9
-    """,
+    oracle=_DUCK_CONTAINMENT,
     tags=("dedup", "containment", "prefix-filter"),
     bench=True,
 )
 def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCALE path for containment dedup: rarest-first prefix-filter
-    candidates (PPJoin family) + per-candidate exact verification —
+    """Exact containment dedup: rarest-first prefix-filter candidates
+    (PPJoin family) + per-candidate exact verification —
     lossless, so the oracle is the FULL exact containment relation, not a
     candidate-restricted weakening. Candidate volume drops from
     Σdf(shingle)² to Σ over prefix shingles only (~(1-t) of each doc,
@@ -254,13 +227,9 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard banding systematically misses short-doc-inside-long-doc pairs
     (the union term dilutes their Jaccard below any band threshold) while
     the prefix bound is a theorem, not an s-curve
-    (`operators/dedup.py:shingle_containment_pairs_prefix`)."""
-    from spark_hbase_connector_spark.operators.dedup import (
-        shingle_containment_pairs_prefix,
-    )
-
+    (`operators/dedup.py:shingle_containment_pairs`)."""
     d = load(spark, sf_dir, "documents")
-    return shingle_containment_pairs_prefix(d, "text", "doc_id", threshold=0.9)
+    return shingle_containment_pairs(d, "text", "doc_id", threshold=0.9)
 
 
 @query(
@@ -501,12 +470,11 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment: connected components (min-label
     propagation over DataFrame joins) on the exact Jaccard>=0.85 near-dup
     pair graph; component id = smallest doc_id in the cluster. The pair
-    source is the prefix-filter scale path (output-identical to the naive
-    inverted-index join; candidate volume Σpf(s)² not Σdf(s)² — r7, same
-    principle as `split_leakage_safe`'s rebind). The oracle replays the
-    pairs plus a bounded min-label closure."""
+    source is the exact prefix-filter join (candidate volume Σpf(s)² not
+    Σdf(s)²). The oracle replays the pairs plus a bounded min-label
+    closure."""
     d = load(spark, sf_dir, "documents")
-    pairs = shingle_jaccard_pairs_prefix(d, "text", "doc_id", threshold=0.85)
+    pairs = shingle_jaccard_pairs(d, "text", "doc_id", threshold=0.85)
     comp = connected_components(pairs)
     return comp.select(F.col("id").alias("doc_id"), F.col("comp").alias("component"))
 
@@ -2331,7 +2299,7 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster: one shuffle on the component id, no window, no second pass
     over the corpus."""
     d = load(spark, sf_dir, "documents")
-    pairs = shingle_jaccard_pairs_prefix(d, "text", "doc_id", threshold=0.85)
+    pairs = shingle_jaccard_pairs(d, "text", "doc_id", threshold=0.85)
     comp = connected_components(pairs)
     jd = comp.join(
         d.select(F.col("doc_id"), F.col("n_chars")),
@@ -2590,14 +2558,15 @@ def kmeans_train_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_stop_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-shingle mining: the 20 highest document-frequency word 3-grams.
-    This is the measurement behind the dedup family's `max_df` knob — the
-    shingles whose posting lists drive the Σdf² candidate blow-up in the
-    exact Jaccard join (SCALE.md) are exactly these; a curation pipeline
-    mines them first, then sets the cap. One Arrow shingling pass (each
-    shingle counted once per doc), one partial-aggregated groupBy, and a
-    top-k over the df relation (shingle-cardinality, not corpus) — the
-    final global sort ranks only rows that survive, and at 100 TB a
-    min-df filter keeps that relation sketch-sized."""
+    These are the shingles whose posting lists would drive the Σdf²
+    candidate blow-up of a plain inverted-index pair join, and the ones
+    the rarest-first prefix joins keep out of their prefixes (SCALE.md);
+    a curation pipeline mines them to see its boilerplate. One Arrow
+    shingling pass (each shingle counted once per doc), one
+    partial-aggregated groupBy, and a top-k over the df relation
+    (shingle-cardinality, not corpus) — the final global sort ranks only
+    rows that survive, and at 100 TB a min-df filter keeps that relation
+    sketch-sized."""
     from spark_hbase_connector_spark.operators.dedup import shingle_postings
     from pyspark.sql import Window as W
 

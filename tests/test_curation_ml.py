@@ -97,10 +97,11 @@ def test_leakage_safe_split_never_splits_a_cluster(spark, sf_dir):
     """The leakage invariant itself: every near-dup pair (the same
     Jaccard>=0.85 graph the entry builds on) lands in ONE split, every
     document is assigned exactly once, and all three splits are
-    non-degenerate on the corpus."""
-    from spark_hbase_connector_spark.operators.dedup import (
-        shingle_jaccard_pairs,
-    )
+    non-degenerate on the corpus. The pairs come from the brute-force
+    Python reference, not from the Spark join the entry itself uses."""
+    import pyarrow.parquet as pq
+
+    from shingle_reference import reference_pairs
 
     out = REGISTRY["split_leakage_safe"].fn(spark, sf_dir).persist()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -115,13 +116,13 @@ def test_leakage_safe_split_never_splits_a_cluster(spark, sf_dir):
         == 0
     )
     # directly: no near-dup pair straddles splits
-    pairs = shingle_jaccard_pairs(docs, "text", "doc_id", threshold=0.85)
-    a = out.select(F.col("doc_id").alias("id1"), F.col("split").alias("s1"))
-    b = out.select(F.col("doc_id").alias("id2"), F.col("split").alias("s2"))
-    straddle = (
-        pairs.join(a, "id1").join(b, "id2").where(F.col("s1") != F.col("s2"))
+    t = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+    pairs = reference_pairs(
+        zip(t["doc_id"].to_pylist(), t["text"].to_pylist()), "jaccard", 0.85
     )
-    assert straddle.count() == 0
+    split = {r.doc_id: r.split for r in out.select("doc_id", "split").collect()}
+    assert pairs
+    assert [p for p in pairs if split[p[0]] != split[p[1]]] == []
     splits = {r.split for r in out.select("split").distinct().collect()}
     assert splits == {"train", "val", "test"}
     out.unpersist()

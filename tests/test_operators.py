@@ -8,9 +8,11 @@ from pyspark.sql import functions as F
 from spark_hbase_connector_spark.catalogs import load
 from spark_hbase_connector_spark.operators.asof import asof_join
 from spark_hbase_connector_spark.operators.dedup import (
+    shingle_containment_pairs,
     shingle_jaccard_pairs,
     simhash_pairs,
 )
+from shingle_reference import reference_pairs
 
 
 def _ts(m):
@@ -232,8 +234,6 @@ def test_duplicated_span_stats_distant_repeats_stay_separate(spark):
 def test_shingle_containment_is_directional(spark):
     """A short doc fully inside a long doc: containment(short in long)=1.0;
     the reverse direction is below threshold and absent."""
-    from spark_hbase_connector_spark.operators.dedup import shingle_containment_pairs
-
     short = "the quick brown fox jumps"
     long = short + " " + " ".join(f"pad{i}" for i in range(20))
     docs = spark.createDataFrame(
@@ -245,38 +245,75 @@ def test_shingle_containment_is_directional(spark):
     assert [(r.id1, r.id2, r.containment) for r in rows] == [(1, 2, 1.0)]
 
 
-def test_containment_prefix_equals_exact(spark):
-    """The prefix-filter scale path must be LOSSLESS vs the exact join —
-    including the short-doc-inside-long-doc pairs an LSH candidate stage
-    would miss (their Jaccard is far below any band threshold)."""
-    from spark_hbase_connector_spark.operators.dedup import (
-        shingle_containment_pairs,
-        shingle_containment_pairs_prefix,
-    )
+def _dense_corpus(first_id: int) -> list[tuple]:
+    """~40 seeded (doc_id, text) rows: random walks over 12 words, each
+    word with 2 successors, so word 3-grams repeat across many documents
+    and pairs overlap densely at every threshold. Seven of them are 3
+    tokens long (one shingle)."""
+    import random
 
+    rng = random.Random(11)
+    vocab = [f"v{i}" for i in range(12)]
+    succ = {v: rng.sample(vocab, 2) for v in vocab}
+    rows = []
+    for k in range(40):
+        toks = [rng.choice(vocab)]
+        for _ in range(rng.randint(2, 14)):
+            toks.append(rng.choice(succ[toks[-1]]))
+        rows.append((first_id + k, " ".join(toks)))
+    return rows
+
+
+# NULL text, an empty string and a document shorter than w=3 tokens: no
+# shingles, so the reference puts them in no pair.
+_NO_SHINGLE_DOCS = [(90, None), (91, ""), (92, "two words")]
+
+
+def _half_up4(x: float) -> float:
+    """Spark's ``round(x, 4)`` on a double (HALF_UP on its decimal form)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def test_containment_prefix_equals_exact(spark):
+    """The prefix-filter join must be LOSSLESS: equal to a brute-force
+    Python reference, pair set AND scores — including the
+    short-doc-inside-long-doc pairs an LSH candidate stage would miss
+    (their Jaccard is far below any band threshold), one-shingle
+    documents, and thresholds down to 0.1, where a prefix spans almost
+    the whole document. Containment is directional: the short doc is
+    inside the long one, never the reverse."""
     short = "alpha beta gamma delta epsilon zeta"
     long = short + " " + " ".join(f"pad{i}" for i in range(60))
+    fox = "the quick brown fox jumps"
     rows = [
-        Row(doc_id=1, text=short),
-        Row(doc_id=2, text=long),  # (1 in 2): containment 1.0, tiny Jaccard
-        Row(doc_id=3, text=long + " tail"),
-        Row(doc_id=4, text=" ".join(f"w{i}" for i in range(40))),
-        Row(doc_id=5, text=" ".join(f"w{i}" for i in range(40)) + " x"),
-        Row(doc_id=6, text="unrelated words entirely different content here"),
+        (1, short),
+        (2, long),  # (1 in 2): containment 1.0, tiny Jaccard
+        (3, long + " tail"),
+        (4, " ".join(f"w{i}" for i in range(40))),
+        (5, " ".join(f"w{i}" for i in range(40)) + " x"),
+        (6, "unrelated words entirely different content here"),
+        (7, fox),
+        (8, fox + " " + " ".join(f"fill{i}" for i in range(20))),
+        *_NO_SHINGLE_DOCS,
+        *_dense_corpus(100),
     ]
-    docs = spark.createDataFrame(rows)
-    for t in (0.9, 0.7):
-        exact = {
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for t in (0.9, 0.7, 0.1, 1.0):
+        ref = {
+            (i1, i2, _half_up4(c))
+            for (i1, i2), c in reference_pairs(rows, "containment", t).items()
+        }
+        got = {
             (r.id1, r.id2, r.containment)
             for r in shingle_containment_pairs(docs, "text", "doc_id", t).collect()
         }
-        pref = {
-            (r.id1, r.id2, r.containment)
-            for r in shingle_containment_pairs_prefix(
-                docs, "text", "doc_id", t
-            ).collect()
-        }
-        assert pref == exact and (1, 2, 1.0) in pref
+        assert got == ref and (1, 2, 1.0) in got
+        assert (7, 8, 1.0) in got
+        if t >= 0.7:  # the reverse direction scores 3/23
+            assert not any(p[:2] == (8, 7) for p in got)
+        assert any(p[0] >= 100 and p[1] >= 100 for p in got)
 
 
 def test_incremental_neardup_excludes_reingested_self(spark):
@@ -814,39 +851,34 @@ def test_cosine_pairs_lsh_hot_cell_salting_is_lossless(spark):
 
 
 def test_jaccard_prefix_equals_exact(spark):
-    """The prefix-filter Jaccard path must be LOSSLESS vs the exact
-    inverted-index join at multiple thresholds — pair set AND scores."""
-    from pyspark.sql import Row
-
-    from spark_hbase_connector_spark.operators.dedup import (
-        shingle_jaccard_pairs,
-        shingle_jaccard_pairs_prefix,
-    )
-
+    """The prefix-filter Jaccard join must be LOSSLESS: equal to a
+    brute-force Python reference at thresholds from 0.1 to 1.0 — pair
+    set AND scores."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [
-        Row(doc_id=1, text=base),
-        Row(doc_id=2, text=base),                       # exact dup: J=1.0
-        Row(doc_id=3, text=base + " extra"),            # near dup
-        Row(doc_id=4, text=base.replace("delta", "DELTA")),
-        Row(doc_id=5, text=" ".join(f"w{i}" for i in range(30))),
-        Row(doc_id=6, text=" ".join(f"w{i}" for i in range(30)) + " tail"),
-        Row(doc_id=7, text="entirely different content with no overlap at all"),
+        (1, base),
+        (2, base),                       # exact dup: J=1.0
+        (3, base + " extra"),            # near dup
+        (4, base.replace("delta", "DELTA")),
+        (5, " ".join(f"w{i}" for i in range(30))),
+        (6, " ".join(f"w{i}" for i in range(30)) + " tail"),
+        (7, "entirely different content with no overlap at all"),
+        *_NO_SHINGLE_DOCS,
+        *_dense_corpus(100),
     ]
-    docs = spark.createDataFrame(rows)
-    for t in (0.85, 0.6):
-        exact = {
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for t in (0.85, 0.6, 0.1, 1.0):
+        ref = {
+            (i1, i2, round(j, 10))
+            for (i1, i2), j in reference_pairs(rows, "jaccard", t).items()
+        }
+        got = {
             (r.id1, r.id2, round(r.jaccard, 10))
             for r in shingle_jaccard_pairs(docs, "text", "doc_id", t).collect()
         }
-        pref = {
-            (r.id1, r.id2, round(r.jaccard, 10))
-            for r in shingle_jaccard_pairs_prefix(
-                docs, "text", "doc_id", t
-            ).collect()
-        }
-        assert pref == exact and (1, 2, 1.0) in pref
-        assert len(exact) >= 3
+        assert got == ref and (1, 2, 1.0) in got
+        if t < 1.0:
+            assert len(ref) >= 3
 
 
 def test_pq_trained_codebooks_beat_sampling_and_adc_recall(spark):
