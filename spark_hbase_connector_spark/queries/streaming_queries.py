@@ -246,7 +246,11 @@ def streaming_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFra
     scheduling wake-up batches, so ``processAllAvailable`` starves —
     instead the sink is POLLED until every user's flush landed (bounded,
     loud timeout), with a throttled trigger so the timer wake-ups don't
-    busy-loop the scheduler."""
+    busy-loop the scheduler. The query checkpoints into its own temporary
+    directory, removed after ``stop()`` returns, and is stopped right
+    after a micro-batch ends: a stop that lands while a timer wake-up
+    batch commits its state store aborts that commit."""
+    import tempfile
     import time
     import uuid
 
@@ -260,46 +264,54 @@ def streaming_session_timeout_close(spark: SparkSession, sf_dir: str) -> DataFra
         .count()
     )
     name = f"mem_{uuid.uuid4().hex[:10]}"
-    # flush_ms must sit WELL above the worst-case inter-batch gap (GC
-    # pause, loaded CI, slow trigger): a mid-stream timeout would split a
-    # session and flake the differential. 6 s against a 500 ms trigger
-    # leaves a >10x determinism margin (ADVICE r5).
-    q = (
-        session_timeout_close(stream, gap_minutes=30, flush_ms=6000)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        # data-proportional deadline: the first micro-batch replays the
-        # whole finite table through the Python shim before any timeout
-        # can fire, so the bound must grow with the input (r6: 180 s was
-        # fine through sf0.1 but tripped at sf1's 1M events)
-        deadline = time.time() + 180 + n_users / 25
-        while True:
-            # DISTINCT users, not raw rows: if a straggler key ever did
-            # flush twice, raw count could hit n_users while another
-            # user's final flush is still pending (early-exit truncation).
-            n_flushed = (
-                spark.table(name)
-                .where(F.col("closed_by") == "timeout")
-                .select("user_id")
-                .distinct()
-                .count()
-            )
-            if n_flushed >= n_users:
-                break
-            if time.time() > deadline:
-                raise RuntimeError(
-                    f"session_timeout_close: only {n_flushed}/{n_users} "
-                    "inactivity flushes landed before the deadline — timer "
-                    "wake-ups are not firing"
+    with tempfile.TemporaryDirectory(prefix=f"{name}-") as checkpoint:
+        # A timeout between two input batches would split a session and
+        # flake the differential; none can, because the file source
+        # delivers the whole table in the first batch. The timers are due
+        # 6 s after it and fire in the next batch, 10 s after the first.
+        # The 10 s trigger outlasts a wake-up batch (1-4 s measured at
+        # sf0.01 on 4 vCPU with 16 shuffle partitions), so the query sits
+        # idle between batches, where it can be stopped.
+        q = (
+            session_timeout_close(stream, gap_minutes=30, flush_ms=6000)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(processingTime="10 seconds")
+            .start()
+        )
+        try:
+            # data-proportional deadline: the first micro-batch replays the
+            # whole finite table through the Python shim before any timeout
+            # can fire, so the bound must grow with the input (r6: 180 s was
+            # fine through sf0.1 but tripped at sf1's 1M events)
+            deadline = time.time() + 180 + n_users / 25
+            while True:
+                # DISTINCT users, not raw rows: if a straggler key ever did
+                # flush twice, raw count could hit n_users while another
+                # user's final flush is still pending (early-exit truncation).
+                n_flushed = (
+                    spark.table(name)
+                    .where(F.col("closed_by") == "timeout")
+                    .select("user_id")
+                    .distinct()
+                    .count()
                 )
-            time.sleep(0.5)
-    finally:
-        q.stop()
+                if n_flushed >= n_users:
+                    break
+                if time.time() > deadline:
+                    raise RuntimeError(
+                        f"session_timeout_close: only {n_flushed}/{n_users} "
+                        "inactivity flushes landed before the deadline — timer "
+                        "wake-ups are not firing"
+                    )
+                time.sleep(0.5)
+        finally:
+            idle_deadline = time.time() + 30
+            while q.isActive and q.status["isTriggerActive"] and time.time() < idle_deadline:
+                time.sleep(0.02)
+            q.stop()
     return spark.table(name).select(
         "user_id",
         F.timestamp_micros(F.col("session_start_us")).alias("session_start"),

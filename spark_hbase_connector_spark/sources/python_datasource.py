@@ -24,6 +24,13 @@ Full structural parity with the reference connector, component by component:
   compute expressions over *typed* values (so negative numerics compare
   correctly — the reference's unsigned-byte-order defect, SURVEY.md §2.1,
   is deliberately not reproduced); rows stream back as Arrow RecordBatches.
+- S11 write path (the reference has none) -> both writers take Spark's
+  Arrow record batches (``DataSourceArrowWriter`` and
+  ``DataSourceStreamArrowWriter``); no row is converted in Python.
+
+One Arrow schema, ``_arrow_schema`` (PySpark's own type mapping), is what
+the reader casts files to and the writers cast batches to, so every
+catalog type, decimal and nested ones included, keeps its declared type.
 
 This source demonstrates connector parity and remote-store ergonomics; the
 *performance* path for Parquet-resident data remains ``sources.table.
@@ -40,10 +47,10 @@ from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     WriterCommitMessage,
     EqualNullSafe,
     EqualTo,
@@ -146,7 +153,11 @@ class HbaseKVDataSource(DataSource):
         return HbaseKVBatchWriter(**self._args(schema), overwrite=overwrite)
 
 
-class HbaseKVReader(DataSourceReader):
+class _Table:
+    """What every hbasekv reader and writer is built from
+    (``HbaseKVDataSource._args``): the catalog, the Spark schema read or
+    written, the table path and the physical column naming."""
+
     def __init__(
         self,
         catalog: TableCatalog,
@@ -158,6 +169,14 @@ class HbaseKVReader(DataSourceReader):
         self.out_schema = schema
         self.path = path
         self.physical_naming = physical_naming
+
+    def _phys(self, logical: str) -> str:
+        return physical_name(self.catalog, logical, self.physical_naming)
+
+
+class HbaseKVReader(_Table, DataSourceReader):
+    def __init__(self, *args, **kwargs) -> None:
+        super().__init__(*args, **kwargs)
         self.pushed: list[Filter] = []
 
     # -- S5: pushdown negotiation ------------------------------------------
@@ -168,11 +187,15 @@ class HbaseKVReader(DataSourceReader):
         (and later evaluated inside the scan); unsupported ones are returned
         so Spark evaluates them post-scan. Unlike the reference we do not
         claim correctness we don't have: everything accepted is evaluated
-        with typed comparisons.
+        with typed comparisons. An ``IN`` list holding NULL goes back to
+        Spark: SQL never matches NULL there, pyarrow's ``isin`` does, and
+        the NULL cannot bound a rowkey range.
         """
         for f in filters:
             inner = f.child if isinstance(f, Not) else f
-            if isinstance(inner, _SUPPORTED) and len(getattr(inner, "attribute", ("x",))) == 1:
+            if isinstance(inner, In) and any(v is None for v in inner.value):
+                yield f
+            elif isinstance(inner, _SUPPORTED) and len(getattr(inner, "attribute", ("x",))) == 1:
                 self.pushed.append(f)
             else:
                 yield f
@@ -194,7 +217,6 @@ class HbaseKVReader(DataSourceReader):
     # -- S9/S10: scan + typed predicate evaluation + decode ------------------
     def read(self, partition: FilePartition | None):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         if partition is None:
             # partitions() kept no file (every file's rowkey range misses
@@ -203,21 +225,14 @@ class HbaseKVReader(DataSourceReader):
             return
         table, rest = self._scan(partition)
         # project to the catalog's logical columns (missing cell -> NULL)
-        arrays, fields = [], []
-        for field in self.out_schema.fields:
-            phys = self._phys(field.name)
-            target = _arrow_type(field.dataType)
-            if phys in table.column_names:
-                col = table.column(phys)
-                if target is not None and col.type != target:
-                    col = pc.cast(col, target)
-            else:
-                col = pa.nulls(table.num_rows, type=target or pa.string())
-            arrays.append(col)
-            fields.append(
-                pa.field(field.name, col.type if hasattr(col, "type") else target)
-            )
-        out = pa.table(dict(zip([f.name for f in fields], arrays)))
+        target = _arrow_schema(self.out_schema)
+        arrays = [
+            table.column(self._phys(f.name)).cast(f.type)
+            if self._phys(f.name) in table.column_names
+            else pa.nulls(table.num_rows, f.type)
+            for f in target
+        ]
+        out = pa.Table.from_arrays(arrays, schema=target)
         # only filters over ABSENT physical columns (phantom cells) remain;
         # they are evaluated over the NULL-filled logical projection
         expr = self._filter_expr(rest, lambda name: name)
@@ -305,9 +320,6 @@ class HbaseKVReader(DataSourceReader):
         return expr
 
     # ------------------------------------------------------------ helpers --
-    def _phys(self, logical: str) -> str:
-        return physical_name(self.catalog, logical, self.physical_naming)
-
     def _data_files(self) -> list[str]:
         return data_files(self.path)
 
@@ -333,7 +345,7 @@ class HbaseKVReader(DataSourceReader):
         return lo, hi
 
 
-class HbaseKVStreamReader(DataSourceStreamReader):
+class HbaseKVStreamReader(_Table, DataSourceStreamReader):
     """Streaming flush-file reader — the streaming sibling of
     :class:`HbaseKVReader` (S1's batch scan): the dataset directory is
     APPEND-ONLY, and every new Parquet file is the analogue of an HBase
@@ -363,18 +375,6 @@ class HbaseKVStreamReader(DataSourceStreamReader):
     the batch cast/NULL-fill path so batch and stream agree
     cell-for-cell."""
 
-    def __init__(
-        self,
-        catalog: TableCatalog,
-        schema: StructType,
-        path: str,
-        physical_naming: str,
-    ) -> None:
-        self.catalog = catalog
-        self.out_schema = schema
-        self.path = path
-        self.physical_naming = physical_naming
-
     def initialOffset(self) -> dict:
         return {"last": ""}
 
@@ -397,12 +397,7 @@ class HbaseKVStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: FilePartition):
-        rdr = HbaseKVReader(
-            catalog=self.catalog,
-            schema=self.out_schema,
-            path=partition.path,
-            physical_naming=self.physical_naming,
-        )
+        rdr = HbaseKVReader(self.catalog, self.out_schema, partition.path, self.physical_naming)
         yield from rdr.read(partition)
 
     def commit(self, end: dict) -> None:
@@ -411,32 +406,21 @@ class HbaseKVStreamReader(DataSourceStreamReader):
 
 @dataclass
 class FlushCommitMessage(WriterCommitMessage):
-    """Per-task commit message: the staged flush file awaiting publication."""
+    """Per-task commit message: the staged flush file awaiting publication
+    (empty when the task had no rows)."""
 
     staged: str
-    rows: int
 
 
-class _FlushFileWriter:
-    """What the stream and batch writers share: each task stages its rows
-    as one rowkey-sorted flush file in the table's hidden ``.staging/``
-    directory (never visible to readers), the driver's ``commit()``
-    publishes the staged files with one manifest swap (``layout.commit``:
-    readers see the table before or after, never a mix), and ``abort()``
-    deletes them."""
-
-    def __init__(
-        self,
-        catalog: TableCatalog,
-        schema: StructType,
-        path: str,
-        physical_naming: str,
-    ) -> None:
-        self.catalog = catalog
-        self.out_schema = schema
-        self.path = path
-        self.physical_naming = physical_naming
-        self.staging = os.path.join(path, ".staging")
+class _FlushFileWriter(_Table):
+    """What the stream and batch writers share: each task receives Spark's
+    Arrow record batches, casts them to the one Arrow schema of the
+    written columns (``_arrow_schema``, the reader's too), renames them to
+    their physical names and stages them as one rowkey-sorted flush file
+    in the table's hidden ``.staging/`` directory (never visible to
+    readers); the driver's ``commit()`` publishes the staged files with
+    one manifest swap (``layout.commit``: readers see the table before or
+    after, never a mix), and ``abort()`` deletes them."""
 
     def write(self, iterator) -> FlushCommitMessage:
         import uuid
@@ -444,21 +428,20 @@ class _FlushFileWriter:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        rows = list(iterator)
-        if not rows:
-            return FlushCommitMessage(staged="", rows=0)
-        names, arrays = [], []
-        for f in self.out_schema.fields:
-            vals = [r[f.name] for r in rows]
-            arrays.append(pa.array(vals, type=_arrow_type(f.dataType)))
-            names.append(physical_name(self.catalog, f.name, self.physical_naming))
-        tbl = pa.table(dict(zip(names, arrays))).sort_by(
-            physical_name(self.catalog, self.catalog.rowkey, self.physical_naming)
+        batches = [b for b in iterator if b.num_rows]
+        if not batches:
+            return FlushCommitMessage(staged="")
+        tbl = (
+            pa.Table.from_batches(batches)
+            .cast(_arrow_schema(self.out_schema))
+            .rename_columns([self._phys(f.name) for f in self.out_schema.fields])
+            .sort_by(self._phys(self.catalog.rowkey))
         )
-        os.makedirs(self.staging, exist_ok=True)
-        staged = os.path.join(self.staging, uuid.uuid4().hex + ".parquet")
+        staging = os.path.join(self.path, ".staging")
+        os.makedirs(staging, exist_ok=True)
+        staged = os.path.join(staging, uuid.uuid4().hex + ".parquet")
         pq.write_table(tbl, staged)
-        return FlushCommitMessage(staged=staged, rows=len(rows))
+        return FlushCommitMessage(staged=staged)
 
     def _publish(self, messages, name, remove=()) -> None:
         """Commit the staged files, the i-th under ``name(i)``."""
@@ -471,7 +454,7 @@ class _FlushFileWriter:
                 os.remove(m.staged)
 
 
-class HbaseKVStreamWriter(_FlushFileWriter, DataSourceStreamWriter):
+class HbaseKVStreamWriter(_FlushFileWriter, DataSourceStreamArrowWriter):
     """Streaming flush-file SINK — the write half of the changefeed story
     (the reference has no write path at all; SURVEY §2.1 S11): each
     micro-batch becomes one or more immutable, rowkey-sorted flush files,
@@ -490,7 +473,7 @@ class HbaseKVStreamWriter(_FlushFileWriter, DataSourceStreamWriter):
         self._publish(messages, lambda i: f"{batchId:010d}-{i:04d}.parquet")
 
 
-class HbaseKVBatchWriter(_FlushFileWriter, DataSourceWriter):
+class HbaseKVBatchWriter(_FlushFileWriter, DataSourceArrowWriter):
     """Batch ``df.write.format("hbasekv")`` — the same staged-flush-file
     two-phase commit as the streaming writer, with a per-job publication
     prefix and optional overwrite (SaveMode.Overwrite retires every live
@@ -505,17 +488,10 @@ class HbaseKVBatchWriter(_FlushFileWriter, DataSourceWriter):
     contract (monotone digit-sorted flush names) applies to directories
     fed by the STREAM writer; a directory is one or the other."""
 
-    def __init__(
-        self,
-        catalog: TableCatalog,
-        schema: StructType,
-        path: str,
-        physical_naming: str,
-        overwrite: bool = False,
-    ) -> None:
+    def __init__(self, *args, overwrite: bool = False, **kwargs) -> None:
         import uuid
 
-        super().__init__(catalog, schema, path, physical_naming)
+        super().__init__(*args, **kwargs)
         self.overwrite = overwrite
         # fixed at job submission on the driver; commit() reuses it, so a
         # commit retry republishes the SAME names (idempotent) while a new
@@ -532,25 +508,16 @@ class HbaseKVBatchWriter(_FlushFileWriter, DataSourceWriter):
         )
 
 
-def _arrow_type(spark_type):
+def _arrow_schema(schema: StructType):
+    """The one Spark -> Arrow type mapping of the reader and both writers:
+    PySpark's own, with zone-less ``timestamp[us]`` (the type flush files
+    have always stored). Every field is nullable, as a Parquet column of
+    sparse cells is."""
     import pyarrow as pa
 
-    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    mapping = {
-        T.BooleanType(): pa.bool_(),
-        T.ByteType(): pa.int8(),
-        T.ShortType(): pa.int16(),
-        T.IntegerType(): pa.int32(),
-        T.LongType(): pa.int64(),
-        T.FloatType(): pa.float32(),
-        T.DoubleType(): pa.float64(),
-        T.StringType(): pa.string(),
-        T.BinaryType(): pa.binary(),
-        T.DateType(): pa.date32(),
-        T.TimestampType(): pa.timestamp("us"),
-    }
-    return mapping.get(spark_type)
+    return pa.schema(f.with_nullable(True) for f in to_arrow_schema(schema, timestamp_utc=False))
 
 
 def register_hbasekv(spark) -> None:

@@ -10,6 +10,7 @@ import os
 import sys
 import threading
 
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, Phase, settings
 from hypothesis import strategies as st
@@ -21,7 +22,6 @@ from hypothesis.stateful import (
     rule,
     run_state_machine_as_test,
 )
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 import spark_hbase_connector_spark
@@ -77,7 +77,11 @@ def _put(path, rows, overwrite=False):
         physical_naming=NAMING,
         overwrite=overwrite,
     )
-    msg = w.write(iter([Row(k=k, v=v) for k, v in rows]))
+    batch = pa.RecordBatch.from_pylist(
+        [{"k": k, "v": v} for k, v in rows],
+        schema=pa.schema([("k", pa.int64()), ("v", pa.int64())]),
+    )
+    msg = w.write(iter([batch]))
     try:
         w.commit([msg])
     except BaseException:

@@ -1,5 +1,7 @@
 """The registered spark.read.format('hbasekv') source (Python DS API)."""
 
+import datetime
+import decimal
 import json
 
 import pytest
@@ -7,11 +9,12 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from spark_hbase_connector_spark.sources.catalog import parse_catalog
+from spark_hbase_connector_spark.sources.layout import data_files
 from spark_hbase_connector_spark.sources.python_datasource import (
     HbaseKVReader,
     register_hbasekv,
 )
-from spark_hbase_connector_spark.sources.table import write_table
+from spark_hbase_connector_spark.sources.table import load_table, write_table
 
 CATALOG = {
     "table": "tpch:customer",
@@ -218,6 +221,9 @@ def test_extended_filter_shapes_not_endswith_nullsafe(registered, sf_dir):
         F.col("c_acctbal").eqNullSafe(F.lit(None).cast("double")),
         ~F.col("c_phantom").eqNullSafe("x"),  # NULL <=> 'x' is False; NOT -> all rows
         ~F.col("c_name").contains("Customer"),
+        # an IN list holding NULL never matches NULL and bounds no rowkey range
+        F.col("c_custkey").isin(1, None),
+        F.col("c_phantom").isin("x", None),
     ]
     for cond in shapes:
         got = df.where(cond).count()
@@ -471,7 +477,8 @@ def test_writer_abort_cleans_staging(tmp_path):
     nothing is published."""
     import json as _json
 
-    from pyspark.sql import Row as _Row
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from spark_hbase_connector_spark.sources.catalog import parse_catalog
     from spark_hbase_connector_spark.sources.python_datasource import (
@@ -498,8 +505,8 @@ def test_writer_abort_cleans_staging(tmp_path):
         path=str(d),
         physical_naming="column",
     )
-    msg = w.write(iter([_Row(k=1, v="x"), _Row(k=2, v="y")]))
-    assert msg.rows == 2 and (d / ".staging").exists()
+    msg = w.write(iter([pa.RecordBatch.from_pydict({"k": [1, 2], "v": ["x", "y"]})]))
+    assert pq.read_metadata(msg.staged).num_rows == 2 and (d / ".staging").exists()
     assert len(list((d / ".staging").iterdir())) == 1
     w.abort([msg, None])
     assert list((d / ".staging").iterdir()) == []
@@ -525,3 +532,74 @@ def test_batch_writer_two_appends_accumulate(registered, tmp_path):
             .option("catalog", json.dumps(sink_catalog))
             .option("path", str(dst)).load())
     assert {(r.c_custkey, r.c_name) for r in back.collect()} == {(1, "a"), (2, "b")}
+
+
+# one column per catalog type: (declared type, a non-NULL cell, the Arrow
+# type of its Parquet column). The first eleven are the types flush files
+# have always stored; decimal and array now store their declared types.
+ALL_TYPES = {
+    "c_bool": ("boolean", True, "bool"),
+    "c_byte": ("byte", -3, "int8"),
+    "c_short": ("short", 300, "int16"),
+    "c_int": ("int", -70000, "int32"),
+    "c_long": ("long", 2**40, "int64"),
+    "c_float": ("float", 1.5, "float"),
+    "c_double": ("double", -2.25, "double"),
+    "c_str": ("string", "s", "string"),
+    "c_bin": ("binary", b"\x00\xff", "binary"),
+    "c_date": ("date", datetime.date(2020, 1, 2), "date32[day]"),
+    "c_ts": ("timestamp", datetime.datetime(2020, 1, 2, 3, 4, 5, 6), "timestamp[us]"),
+    "c_dec": ("decimal(10,2)", decimal.Decimal("12.34"), "decimal128(10, 2)"),
+    "c_arr": ("array<int>", [1, None, 3], "list<element: int32>"),
+}
+
+
+def test_all_types_round_trip_both_writers(registered, tmp_path):
+    """Every catalog type through the batch writer and the stream writer,
+    read back through hbasekv and load_table: a row of NULL cells, a
+    declared column no write holds, more write tasks than rows (the empty
+    tasks stage nothing) and both physical namings. Each Parquet column
+    has the Arrow type of its declared type."""
+    import pyarrow.parquet as pq
+
+    columns = {"k": {"cf": "rowkey", "col": "k", "type": "long"}}
+    columns.update({n: {"cf": "d", "col": n, "type": t} for n, (t, _, _) in ALL_TYPES.items()})
+    written = {"table": "t:types", "rowkey": "k", "columns": columns}
+    never = {"never": {"cf": "d", "col": "never", "type": "string"}}
+    declared = {**written, "columns": {**columns, **never}}
+    rows = [
+        (2,) + tuple(v for _, v, _ in ALL_TYPES.values()),
+        (1,) + (None,) * len(ALL_TYPES),
+    ]
+    batch_dir, stream_dir = str(tmp_path / "batch"), str(tmp_path / "stream")
+    (registered.createDataFrame(rows, parse_catalog(written).to_struct_type())
+        .repartition(5).write.format("hbasekv")
+        .option("catalog", json.dumps(written))
+        .option("path", batch_dir).mode("append").save())
+    counts = [pq.read_metadata(f).num_rows for f in data_files(batch_dir)]
+    assert sum(counts) == 2 and all(counts)  # the empty tasks staged nothing
+    q = (
+        registered.readStream.format("hbasekv")
+        .option("catalog", json.dumps(written)).option("path", batch_dir).load()
+        .writeStream.format("hbasekv")
+        .option("catalog", json.dumps(written)).option("path", stream_dir)
+        .option("physical_naming", "cf:col")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    expect = sorted(r + (None,) for r in rows)
+    for path, naming, prefix in ((batch_dir, "column", ""), (stream_dir, "cf:col", "d:")):
+        stored = {"k": "int64", **{prefix + n: t for n, (_, _, t) in ALL_TYPES.items()}}
+        for f in data_files(path):
+            assert {fld.name: str(fld.type) for fld in pq.read_schema(f)} == stored
+        kv = (registered.read.format("hbasekv")
+              .option("catalog", json.dumps(declared)).option("path", path)
+              .option("physical_naming", naming).load())
+        native = load_table(registered, declared, path, physical_naming=naming)
+        for df in (kv, native):
+            assert sorted(tuple(r) for r in df.collect()) == expect, (path, df)
