@@ -20,11 +20,13 @@ Design for 100 TB:
   Spark's own file-scan packing.
 - `compact_flush_files` rewrites ONLY groups with >1 file (already-right-sized
   files are left in place untouched), one Spark job per group reading
-  just that group's files and writing ONE rowkey-sorted replacement via
-  coalesce(1) — a map-only re-encode, no shuffle: inputs are
-  rowkey-sorted and (by the writer contract) non-overlapping in
-  time-order, so concatenation in file order preserves the global range
-  layout.
+  just that group's files with the schema the table's manifest records
+  (no inference job) and writing ONE replacement via coalesce(1) — one
+  task, no shuffle. Spark packs a group's splits by size, not by file
+  order, so the task sorts its rows by the rowkey the manifest records
+  (``sortWithinPartitions``): the merged file's row groups then hold
+  ordered rowkey ranges, even where flushes overlapped. A table whose
+  manifest records no rowkey is concatenated unsorted.
 
 Crash contract: each group is one ``layout.commit`` (a manifest swap)
 that lists the merged file, under a fresh name sorting where the group's
@@ -41,7 +43,8 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from spark_hbase_connector_spark.sources.layout import commit, data_files
+from spark_hbase_connector_spark.sources.layout import commit, data_files, snapshot
+from spark_hbase_connector_spark.sources.table import _read_files
 
 
 def plan_compaction(path: str, target_bytes: int = 128 * 1024 * 1024) -> list[list[str]]:
@@ -49,10 +52,14 @@ def plan_compaction(path: str, target_bytes: int = 128 * 1024 * 1024) -> list[li
     filename order (= rowkey/flush order for write_table / hbasekv
     layouts). Returns groups of file paths; only groups of >=2 files are
     worth rewriting."""
+    return _pack(data_files(path), target_bytes)
+
+
+def _pack(files: list[str], target_bytes: int) -> list[list[str]]:
     groups: list[list[str]] = []
     cur: list[str] = []
     cur_bytes = 0
-    for f in data_files(path):
+    for f in files:
         sz = os.path.getsize(f)
         if cur and cur_bytes + sz > target_bytes:
             groups.append(cur)
@@ -73,7 +80,10 @@ def compact_flush_files(
 
     Returns {"groups_rewritten": int, "files_before": int, "files_after": int}.
     """
-    groups = plan_compaction(path, target_bytes)
+    # one manifest read: the groups and the schema they are read with
+    # come from the same table version
+    table = snapshot(path)
+    groups = _pack(table.files, target_bytes)
     files_before = sum(len(g) for g in groups)
     staging = os.path.join(path, ".staging", uuid.uuid4().hex)
     rewritten = 0
@@ -82,20 +92,16 @@ def compact_flush_files(
             if len(group) < 2:
                 continue
             out_dir = os.path.join(staging, f"g{i}")
-            # file order == rowkey-range order by the writer contract, so
-            # a single-task concat re-encode keeps the sorted layout
-            (
-                spark.read.parquet(*group)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(out_dir)
-            )
+            df = _read_files(spark, group, table.schema).coalesce(1)
+            if table.rowkey is not None:
+                df = df.sortWithinPartitions(f"`{table.rowkey}`")
+            df.write.mode("overwrite").parquet(out_dir)
             [part] = data_files(out_dir)
             # "<first>-<token>.parquet" sorts just before "<first>.parquet",
             # so the merged rows keep the group's place in file order
             first = os.path.basename(group[0]).removesuffix(".parquet")
             merged = f"{first}-{uuid.uuid4().hex[:8]}.parquet"
-            commit(path, {part: merged}, remove=group)
+            commit(path, {part: merged}, group, schema=df.schema, rowkey=table.rowkey)
             rewritten += 1
     finally:
         shutil.rmtree(staging, ignore_errors=True)

@@ -414,9 +414,9 @@ class FlushCommitMessage(WriterCommitMessage):
 
 class _FlushFileWriter(_Table):
     """What the stream and batch writers share: each task receives Spark's
-    Arrow record batches, casts them to the one Arrow schema of the
-    written columns (``_arrow_schema``, the reader's too), renames them to
-    their physical names and stages them as one rowkey-sorted flush file
+    Arrow record batches, renames them to their physical names, casts
+    them to the one Arrow schema of the written columns (``_arrow_schema``,
+    the reader's too) and stages them as one rowkey-sorted flush file
     in the table's hidden ``.staging/`` directory (never visible to
     readers); the driver's ``commit()`` publishes the staged files with
     one manifest swap (``layout.commit``: readers see the table before or
@@ -433,8 +433,8 @@ class _FlushFileWriter(_Table):
             return FlushCommitMessage(staged="")
         tbl = (
             pa.Table.from_batches(batches)
-            .cast(_arrow_schema(self.out_schema))
             .rename_columns([self._phys(f.name) for f in self.out_schema.fields])
+            .cast(self._file_schema())
             .sort_by(self._phys(self.catalog.rowkey))
         )
         staging = os.path.join(self.path, ".staging")
@@ -443,10 +443,27 @@ class _FlushFileWriter(_Table):
         pq.write_table(tbl, staged)
         return FlushCommitMessage(staged=staged)
 
+    def _file_schema(self):
+        """The Arrow schema of every flush file: ``_arrow_schema`` under
+        the physical column names."""
+        import pyarrow as pa
+
+        return pa.schema(f.with_name(self._phys(f.name)) for f in _arrow_schema(self.out_schema))
+
     def _publish(self, messages, name, remove=()) -> None:
-        """Commit the staged files, the i-th under ``name(i)``."""
+        """Commit the staged files, the i-th under ``name(i)``, with the
+        Spark schema Spark reads from them (zone-less timestamps read as
+        ``timestamp_ntz``) and their rowkey."""
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         staged = [m.staged for m in messages if m is not None and m.staged]
-        commit(self.path, {f: name(i) for i, f in enumerate(staged)}, remove)
+        commit(
+            self.path,
+            {f: name(i) for i, f in enumerate(staged)},
+            remove,
+            schema=from_arrow_schema(self._file_schema(), prefer_timestamp_ntz=True),
+            rowkey=self._phys(self.catalog.rowkey),
+        )
 
     def abort(self, messages, batchId: int | None = None) -> None:
         for m in messages:

@@ -21,7 +21,9 @@ query compiler in front of the source would:
   reading only the file prefix that can contain the lowest n rowkeys.
   Planning is one driver-side footer read per file
   (``layout.file_bounds``: row count and rowkey min/max, no Spark job —
-  the region directory analogue). ``write_table``'s
+  the region directory analogue), and the selected files are read with
+  the schema the table's manifest records, so building the read runs no
+  job either. ``write_table``'s
   ``repartitionByRange(rowkey)`` layout gives (near-)non-overlapping
   per-file rowkey ranges, so a prefix of the rk_min-sorted files with
   ``cumsum(rows) >= n`` bounds the read set; a later file can only
@@ -58,8 +60,9 @@ from spark_hbase_connector_spark.sources.layout import (
     data_files,
     file_bounds,
     physical_name,
+    snapshot,
 )
-from spark_hbase_connector_spark.sources.table import load_table
+from spark_hbase_connector_spark.sources.table import _load_files
 
 __all__ = ["footer_stats_agg", "head_by_rowkey", "HeadPlan"]
 
@@ -315,9 +318,8 @@ def head_by_rowkey(
     if n < 1:
         raise ValueError("head_by_rowkey: n must be >= 1")
     cat = _as_catalog(catalog)
-    manifest = file_bounds(
-        data_files(path), physical_name(cat, cat.rowkey, physical_naming)
-    )
+    table = snapshot(path)
+    manifest = file_bounds(table.files, physical_name(cat, cat.rowkey, physical_naming))
     files_total = len(manifest)
     known = sorted(
         (r for r in manifest if r.rk_min is not None), key=lambda r: r.rk_min
@@ -343,7 +345,7 @@ def head_by_rowkey(
             if r.path not in chosen and r.rk_min <= bound:
                 selected.append(r.path)
     df = (
-        load_table(spark, cat, selected, physical_naming=physical_naming)
+        _load_files(spark, cat, selected, table.schema, physical_naming)
         .orderBy(F.col(cat.rowkey))
         .limit(n)
     )

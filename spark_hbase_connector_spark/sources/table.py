@@ -23,7 +23,9 @@ Catalyst + Parquet already do natively. So the PySpark-native equivalent is
 Commit contract: a flat Parquet ``write_table`` stages Spark's output under
 ``path/.staging/`` and publishes it with one manifest swap
 (``layout.commit``), so readers see the old table or the new one and a
-table may be rewritten in place — the whole-table compaction.
+table may be rewritten in place — the whole-table compaction. The
+manifest also records the written schema, which ``load_table`` reads
+instead of inferring one.
 
 Physical naming: ``write_table`` stores columns under ``cf:qualifier`` and
 the rowkey under its catalog ``col`` qualifier (one convention,
@@ -41,6 +43,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from spark_hbase_connector_spark.sources.catalog import (
     TableCatalog,
@@ -51,6 +54,7 @@ from spark_hbase_connector_spark.sources.layout import (
     data_files,
     has_manifest,
     physical_name,
+    snapshot,
 )
 
 
@@ -60,8 +64,6 @@ def _physical_schema(cat: TableCatalog, naming: str, overrides: dict | None = No
     ``overrides`` maps logical name -> type string for columns whose FILE
     encoding differs from the declared logical type (e.g. epoch-long under
     a declared timestamp); ``_adapt`` then reconciles."""
-    from pyspark.sql import types as T
-
     from spark_hbase_connector_spark.sources.catalog import type_for
 
     overrides = overrides or {}
@@ -92,6 +94,15 @@ def load_table(
     decodes to NULL, ``HbasePartitionReader.scala:58``); a catalog may
     declare columns never written (FIXTURES.md fixture 1, column ``c``).
 
+    ``path``: a table written by the engine (its manifest names the live
+    files), a list of data files, or any Parquet file or directory. A
+    manifest that records the files' schema is read with it, so building
+    the DataFrame launches no Spark job. Without a recorded schema the
+    files of a manifest table or list are read with every footer's
+    columns merged (one inference job; an append of a column subset
+    keeps its other files' columns), and any other path as Spark infers
+    it.
+
     ``data_format``: parquet (default; full pushdown + row-group pruning),
     orc (columnar too: embedded schema, stripe-level stats + predicate
     pushdown — the peer interchange format), csv, or json. Text formats
@@ -120,22 +131,17 @@ def load_table(
     if on_malformed not in modes:
         raise ValueError(f"on_malformed must be one of {sorted(modes)}")
     cat = catalog if isinstance(catalog, TableCatalog) else parse_catalog(catalog)
-    # a list of paths = an explicit file subset (planner-pruned read sets,
-    # e.g. stats_scan.head_by_rowkey); columnar formats only. A manifest
-    # table reads the files its manifest lists.
-    if isinstance(path, list):
-        paths = path
-    else:
-        paths = data_files(path) if has_manifest(path) else [path]
+    # a list of paths = an explicit file subset (planner-pruned read sets);
+    # columnar formats only
+    if data_format == "parquet" and isinstance(path, list):
+        return _load_files(spark, cat, path, None, physical_naming)
+    if data_format == "parquet" and has_manifest(path):
+        table = snapshot(path)
+        return _load_files(spark, cat, table.files, table.schema, physical_naming)
     if data_format == "parquet":
-        # an empty table has no file to infer a schema from
-        raw = (
-            spark.read.parquet(*paths)
-            if paths
-            else spark.createDataFrame([], _physical_schema(cat, physical_naming))
-        )
+        raw = spark.read.parquet(path)
     elif data_format == "orc":
-        raw = spark.read.orc(*paths)
+        raw = spark.read.orc(*(path if isinstance(path, list) else [path]))
     elif data_format == "csv":
         raw = spark.read.schema(
             _physical_schema(cat, physical_naming, physical_overrides)
@@ -146,10 +152,40 @@ def load_table(
         ).json(path, mode=modes[on_malformed])
     else:
         raise ValueError(f"unknown data_format {data_format!r}")
+    return _project(raw, cat, physical_naming)
+
+
+def _read_files(spark: SparkSession, files: list[str], schema: dict | None) -> DataFrame:
+    """Read a KV table's data files (all of them, or a planner's subset).
+    With the schema its manifest records, nothing is inferred: no Spark
+    job. Without one, every file's footer is merged (one job), because
+    the engine's writers may append a column subset (an hbasekv write
+    with a narrower catalog) and Spark's default infers from one file
+    only, reading the columns that file lacks as NULL in every file."""
+    if schema is not None:
+        return spark.read.schema(T.StructType.fromJson(schema)).parquet(*files)
+    return spark.read.option("mergeSchema", True).parquet(*files)
+
+
+def _load_files(
+    spark: SparkSession, cat: TableCatalog, files: list[str], schema: dict | None, naming: str
+) -> DataFrame:
+    """``load_table`` over a KV table's data files and recorded schema."""
+    if files:
+        raw = _read_files(spark, files, schema)
+    else:
+        # an empty table has no file to read a schema from
+        raw = spark.createDataFrame([], _physical_schema(cat, naming))
+    return _project(raw, cat, naming)
+
+
+def _project(raw: DataFrame, cat: TableCatalog, naming: str) -> DataFrame:
+    """The logical view of a physical read: each catalog column cast from
+    its file type (``_adapt``), or NULL when no file holds it."""
     physical_types = {f.name: f.dataType for f in raw.schema.fields}
     projections = []
     for name, col in cat.columns.items():
-        phys = physical_name(cat, name, physical_naming)
+        phys = physical_name(cat, name, naming)
         typ = col.spark_type(name)
         if phys in physical_types:
             expr = _adapt(F.col(f"`{phys}`"), physical_types[phys], typ)
@@ -181,8 +217,6 @@ def _adapt(expr, physical, declared):
     - anything else -> plain CAST (includes TIMESTAMP_NTZ -> TIMESTAMP,
       which Spark resolves under the session zone).
     """
-    from pyspark.sql import types as T
-
     integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     is_ts = lambda t: isinstance(t, (T.TimestampType, T.TimestampNTZType))  # noqa: E731
     if isinstance(physical, integral) and is_ts(declared):
@@ -286,7 +320,7 @@ def write_table(
         try:
             writer.parquet(staging)
             new = {f: os.path.basename(f) for f in data_files(staging)}
-            commit(path, new, remove=data_files(path))
+            commit(path, new, data_files(path), schema=out.schema, rowkey=rowkey_phys)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
     elif data_format == "parquet":
